@@ -1,7 +1,6 @@
 package graft
-import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     // ambient machine load BEFORE this run adds its own — the value
@@ -9,44 +8,9 @@ object Bench {
     val loadAtStart = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // InferFiltersFromGenerate + filter pushdown re-evaluates the
-      // GENERATOR expression inside the scan filter: every
-      // explode-based training featurize (char_ngrams_utf8,
-      // dsir_feature_buckets, transition pairs) ran twice per row
-      // (r14; plan excerpt in OPTIMIZATION_r14.md). The inferred
-      // size()>0 filter only saves empty-row Generate machinery
-      // here (explodes sit directly on scans), so it is a strict
-      // loss at any scale for expensive generators.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      // experiment knob (r14, default OFF): AQE replanning of cache
-      // materialization coalesces model-sized caches (helps compile-
-      // heavy queries ~0.5 s) but ALSO coalesces corpus-proportional
-      // caches at sf0.1 (dedup shingle tables, LM scored tables) and
-      // costs their downstream stages parallelism — measured net
-      // wash-to-negative (BenchOne A/B in OPTIMIZATION_r14.md), so
-      // the model-table fix is the surgical repartition(1) in the
-      // compile paths instead
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "false"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = Session.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Full-row consumption, NOT count(): under a count Catalyst prunes
-    // unreferenced projections, so scan-shaped queries would measure
-    // less than the work they declare. foreach over the InternalRow
-    // RDD evaluates every output column on the executors with zero
-    // driver materialization.
-    def consume(df: org.apache.spark.sql.DataFrame): Unit =
-      df.queryExecution.toRdd.foreach(_ => ())
+    import Measure.{consume, fmt, seconds}
     // A query that throws must NEVER be recorded as a (tiny) timing —
     // a fail-fast AnalysisException would silently flatter the total.
     // Failures drop out of `results` and surface as "errors":N in the
@@ -58,15 +22,12 @@ object Bench {
     // warmup pass: JIT + codegen + broadcast warm, parquet footer
     // cache — then measure steady-state (what a resident service on
     // a cluster actually runs at).
-    // local profiling aid: skip the full query loop to iterate on the
-    // CDC throughput section alone (driver runs always time everything)
-    val skipQueries = sys.env.get("SPARK_GRAFT_SKIP_QUERIES").contains("1")
     // name-sorted: a HashMap's iteration order varies with the key
     // set, so adding ONE query would otherwise reshuffle every
     // query's GC/cache neighborhood and make per-query timings
     // incomparable across rounds
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-    if (!skipQueries) ordered.foreach { case (_, fn) =>
+    ordered.foreach { case (_, fn) =>
       try consume(fn(spark, sfDir)) catch { case _: Throwable => }
     }
     // Per-query System.gc() + MEDIAN-of-3 (was min-of-2): the r5
@@ -80,29 +41,25 @@ object Bench {
     // before the first sample so a query is charged its OWN
     // allocation, and the median survives one bad sample where min
     // survives zero.
-    def timeOnce(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
-      val t0 = System.nanoTime()
-      try { consume(fn(spark, sfDir)); Some((System.nanoTime() - t0) / 1e9) }
+    def timeOnce(name: String, fn: (SparkSession, String) => DataFrame): Option[Double] =
+      try Some(seconds(consume(fn(spark, sfDir))))
       catch { case e: Throwable =>
         errors.getOrElseUpdate(name, firstLine(e))
         None
       }
-    }
     // keep all 3 sorted samples per query: the median is the score,
     // and (max-min)/median is the NOISE marker — a one-shot outlier
     // under driver contention shows as high spread with a normal
     // median, where a real plan regression moves the median itself
-    val samples =
-      if (skipQueries) Map.empty[String, Seq[Double]]
-      else ordered.flatMap { case (name, fn) =>
-        System.gc()
-        val ts = (1 to 3).flatMap(_ => timeOnce(name, fn))
-        if (ts.size == 3) Some(name -> ts.sorted) else None
-      }.toMap
-    var results = samples.map { case (k, ts) => k -> ts(1) }
-    var spreads = samples.map { case (k, ts) =>
-      k -> (if (ts(1) > 0) (ts(2) - ts(0)) / ts(1) else 0.0) }
+    def sample3(name: String, fn: (SparkSession, String) => DataFrame): Option[Seq[Double]] = {
+      System.gc()
+      val ts = (1 to 3).flatMap(_ => timeOnce(name, fn))
+      if (ts.size == 3) Some(ts.sorted) else None
+    }
+    def spread(s: Seq[Double]): Double = if (s(1) > 0) (s(2) - s(0)) / s(1) else 0.0
+    val samples = ordered.flatMap { case (name, fn) => sample3(name, fn).map(name -> _) }.toMap
+    var results = samples.map { case (k, s) => k -> s(1) }
+    var spreads = samples.map { case (k, s) => k -> spread(s) }
     // Self-healing resample (r10: the driver's one-shot sweep
     // published 11.1 s for a query that re-measures at 2.4 s median —
     // the score channel must not depend on judge re-measurement):
@@ -113,92 +70,29 @@ object Bench {
     // machine re-runs minutes, not the suite; medians can only
     // improve, so a resample never hides a real regression.
     val resampled = scala.collection.mutable.ArrayBuffer.empty[String]
-    locally {
-      val qByName = ordered.toMap
-      spreads.toSeq.filter(_._2 > 0.6).sortBy(-_._2).take(16)
-        .foreach { case (name, _) =>
-          qByName.get(name).foreach { fn =>
-            System.gc()
-            val ts = (1 to 3).flatMap(_ => timeOnce(name, fn))
-            if (ts.size == 3) {
-              val s = ts.sorted
-              resampled += name
-              if (s(1) < results(name)) {
-                results += name -> s(1)
-                spreads += name ->
-                  (if (s(1) > 0) (s(2) - s(0)) / s(1) else 0.0)
-              }
-            }
-          }
+    val qByName = ordered.toMap
+    spreads.toSeq.filter(_._2 > 0.6).sortBy(-_._2).take(16).foreach { case (name, _) =>
+      sample3(name, qByName(name)).foreach { s =>
+        resampled += name
+        if (s(1) < results(name)) {
+          results += name -> s(1)
+          spreads += name -> spread(s)
         }
+      }
     }
     errors.foreach { case (name, msg) =>
       System.err.println(s"bench query failed: $name: $msg")
     }
-    // CDC pipeline throughput — the reference's ACTUAL workload shape
-    // (SURVEY §3.1): JSONL changelog → DSv2 graft-changelog source →
-    // route → typed decode → per-key compaction → parquet upsert
-    // sink, one AvailableNow pass over the whole log. rows/s compares
-    // directly against the reference envelope floor (~3,400
-    // rows/s/table derived from its batch constants, BASELINE.md).
+    // CDC pipeline throughput (CdcDrain), with the same steady-state
+    // methodology as the query side (warmup + min-of-two): the first
+    // drain pays one-off streaming-engine init + FS cache warm; a
+    // resident pipeline never does
     val (cdcRows, cdcRowsPerSec) = try {
-      import org.apache.spark.sql.functions._
-      import graft.meta.{ColumnDef, TableDef}
-      val tmp = java.nio.file.Files.createTempDirectory("graft-bench-cdc")
-      val logDir = tmp.resolve("log").toString
-      // ts → Long ns regardless of the parquet encoding (the driver
-      // has shipped both int64-nanos and timestamp[us] — see
-      // Tables.normalizeTsNs)
-      val ev = Tables.normalizeTsNs(spark.read.parquet(s"$sfDir/events.parquet"))
-      val n = ev.count()
-      // one sorted range-partitioned file per shard: seqs must be
-      // monotone WITHIN a file (the source's early-stop contract for
-      // append-only shard files)
-      ev.select(col("event_id").as("seq"), to_json(struct(
-          lit("app").as("db"), lit("events").as("table"),
-          lit("insert").as("op"),
-          expr("ts div 1000000").as("ts"),
-          concat(lit("gtid:"), col("event_id")).as("pos"),
-          col("event_id").as("seq"), lit(0).as("tableVersion"),
-          map(lit("event_id"), col("event_id").cast("string"),
-            lit("user_id"), col("user_id").cast("string"),
-            lit("event_type"), col("event_type"),
-            lit("value"), col("value").cast("string")).as("after")))
-          .as("value"))
-        .repartitionByRange(8, col("seq")).sortWithinPartitions(col("seq"))
-        .select(col("value")).write.mode("overwrite").text(logDir)
-      val dir = java.nio.file.Paths.get(logDir)
-      java.nio.file.Files.list(dir).iterator().asScala
-        .filter(_.toString.endsWith(".txt")).foreach { p =>
-          java.nio.file.Files.move(p,
-            p.resolveSibling(p.getFileName.toString + ".jsonl"))
-        }
-      val target = TableDef("app", "events", Seq(
-        ColumnDef("event_id", "bigint", isPrimaryKey = true),
-        ColumnDef("user_id", "bigint"),
-        ColumnDef("event_type", "varchar(32)"),
-        ColumnDef("value", "double")))
-      // same steady-state methodology as the query side (warmup +
-      // min-of-two): the first drain pays one-off streaming-engine
-      // init + FS cache warm; a resident pipeline never does
-      def drain(tag: String): Option[Double] = {
-        val sinkDir = tmp.resolve(s"sink-$tag").toString
-        val ckpt = tmp.resolve(s"ckpt-$tag").toString
-        val t0 = System.nanoTime()
-        val q = graft.streaming.Pipeline.start(
-          spark.readStream.format("graft-changelog").option("path", logDir).load(),
-          Seq(graft.streaming.Pipeline.Route("app", "events", target)),
-          new graft.sinks.ParquetUpsertSink(sinkDir), ckpt,
-          trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        val finished = q.awaitTermination(600000)
-        // a timed-out pipeline processed only part of the log — n/secs
-        // would overstate throughput exactly when it is slowest
-        if (finished) Some((System.nanoTime() - t0) / 1e9) else None
-      }
-      drain("warmup")
-      (drain("m1"), drain("m2")) match {
-        case (Some(a), Some(b)) => (n, n / math.min(a, b))
-        case _ => (n, -1.0)
+      val cdc = new CdcDrain(spark, sfDir, shards = 8)
+      cdc.drain("warmup")
+      (cdc.drain("m1"), cdc.drain("m2")) match {
+        case (Some(a), Some(b)) => (cdc.rows, cdc.rows / math.min(a, b))
+        case _ => (cdc.rows, -1.0)
       }
     } catch { case e: Throwable =>
       System.err.println(s"cdc throughput bench failed: $e")
@@ -209,7 +103,6 @@ object Bench {
     // ~2800 chars and truncates the line start → "parsed": null in
     // rounds 1-2. So: 3-decimal rendering AND only a headline subset
     // in "queries" (total/value still sums EVERY declared query).
-    def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     val headline = Seq(
       "q1_pricing_summary", "q3_segment_topk", "q5_region_nation_revenue",
       "q6_revenue_forecast", "q18_large_orders", "q_asof_join",
@@ -222,8 +115,9 @@ object Bench {
       "emb_gram_matrix", "text_blocklist_hits", "cdc_table_checksum",
       "text_bm25_topk", "hybrid_rrf_topk", "q_percentiles",
       "model_nb_predict", "model_lm_kernel", "model_dsir_weights")
-    val qs = headline.flatMap(k => results.get(k).map(v => s"\"" + k + "\":" + fmt(v)))
-      .mkString("{", ",", "}")
+    def obj(kvs: Seq[(String, Double)]): String =
+      kvs.map { case (k, v) => s"\"$k\":${fmt(v)}" }.mkString("{", ",", "}")
+    val qs = obj(headline.flatMap(k => results.get(k).map(k -> _)))
     // contention marker: headline queries whose 3-sample spread
     // exceeded 40% of the median — a judge reading a slow number can
     // tell one-shot noise (high spread here) from a plan regression
@@ -231,11 +125,9 @@ object Bench {
     // only: the driver tail-parses the LAST 2000 stdout chars, and a
     // fully-contended run would otherwise blow that budget (the
     // complete map is in the .spread.json dump)
-    val noisy = headline
+    val noisy = obj(headline
       .flatMap(k => spreads.get(k).filter(_ > 0.4).map(k -> _))
-      .sortBy(-_._2).take(8)
-      .map { case (k, s) => s"\"" + k + "\":" + fmt(s) }
-      .mkString("{", ",", "}")
+      .sortBy(-_._2).take(8))
     // which queries were re-measured (spread > 0.6 → one fresh
     // 3-sample pass, better median published). Top-8 names only —
     // same tail-budget economics as the noise block; the full list
@@ -254,21 +146,17 @@ object Bench {
       val path = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
         "BENCH_full_latest.json")
       try {
-        val full = results.toSeq.sortBy(-_._2)
-          .map { case (k, v) => s"\"$k\":${fmt(v)}" }.mkString("{", ",", "}")
         java.nio.file.Files.write(java.nio.file.Paths.get(path),
-          full.getBytes("UTF-8"))
+          obj(results.toSeq.sortBy(-_._2)).getBytes("UTF-8"))
         // sibling spread dump (same keys, (max-min)/median over the 3
         // samples): lets a per-query number in the flat dump be
         // read WITH its one-shot noise, keeping the flat file's
         // format stable for cross-round comparison
-        val spread = spreads.toSeq.sortBy(-_._2)
-          .map { case (k, v) => s"\"$k\":${fmt(v)}" }.mkString("{", ",", "}")
         java.nio.file.Files.write(
           // stripSuffix, NOT replace: replace would mangle a path whose
           // DIRECTORY contains ".json" (runs.json/bench.json)
           java.nio.file.Paths.get(path.stripSuffix(".json") + ".spread.json"),
-          spread.getBytes("UTF-8"))
+          obj(spreads.toSeq.sortBy(-_._2)).getBytes("UTF-8"))
       } catch { case e: Throwable =>
         // a broken profiling path must not kill the run AFTER all
         // queries completed — the stdout JSON line still has to print

@@ -328,9 +328,8 @@ object CurateMain {
       val dir = args.sliding(2).collectFirst {
         case Array("--compact-index", d) if !d.startsWith("--") => d
       }.getOrElse(sys.error("--compact-index requires an index directory"))
-      val spark = SparkSession.builder()
-        .master(sys.props.getOrElse("spark.master", "local[*]"))
-        .config("spark.ui.enabled", "false").getOrCreate()
+      val spark = Session.local(
+        sys.props.getOrElse("spark.master", "local[*]")).getOrCreate()
       try {
         val kind = compactAnyIndex(spark, dir)
         // escape: the dir is user input inside a JSON-line contract
@@ -342,18 +341,8 @@ object CurateMain {
     val configPath = args.sliding(2).collectFirst {
       case Array("--config", p) => p
     }.getOrElse(sys.error("required: --config <curate.toml>"))
-    val spark = SparkSession.builder()
-      .master(sys.props.getOrElse("spark.master", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // inferred generate-filters duplicate expensive generators
-      // (r14, see Bench)
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(
+      sys.props.getOrElse("spark.master", "local[*]")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {
       val configText = Files.readString(Paths.get(configPath))

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** sf1 streaming-curation soak (round-10 verdict item 4) — the
@@ -65,14 +64,7 @@ object CurationSoakMain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/tmp/testdata/sf1")
     val work = args.lift(1).getOrElse("/tmp/curation-soak")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = Session.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -39,33 +39,7 @@ object ModelFilterSoakMain {
       "tokenizer = \"char\"\nchar-n = 5\n" else ""
     val root = Files.createTempDirectory("model-serve-soak").toString
 
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // InferFiltersFromGenerate + filter pushdown re-evaluates the
-      // GENERATOR expression inside the scan filter: every
-      // explode-based training featurize (char_ngrams_utf8,
-      // dsir_feature_buckets, transition pairs) ran twice per row
-      // (r14; plan excerpt in OPTIMIZATION_r14.md). The inferred
-      // size()>0 filter only saves empty-row Generate machinery
-      // here (explodes sit directly on scans), so it is a strict
-      // loss at any scale for expensive generators.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      // experiment knob (r14, default OFF): AQE replanning of cache
-      // materialization coalesces model-sized caches (helps compile-
-      // heavy queries ~0.5 s) but ALSO coalesces corpus-proportional
-      // caches at sf0.1 (dedup shingle tables, LM scored tables) and
-      // costs their downstream stages parallelism — measured net
-      // wash-to-negative (BenchOne A/B in OPTIMIZATION_r14.md), so
-      // the model-table fix is the surgical repartition(1) in the
-      // compile paths instead
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "false"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {
       val docs = Tables.load(spark, sfDir, "documents")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,39 +8,7 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter (local
     // iteration aid; the driver always runs the full suite)
     val only = args.lift(2).map(_.split(',').toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // harmless belt-and-braces: if the driver ever regenerates
-      // events.ts as TIMESTAMP(NANOS) again (it has flipped encodings
-      // between rounds), this reads it as Long ns instead of erroring;
-      // Tables.normalizeTsNs handles the current timestamp[us] form.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // InferFiltersFromGenerate + filter pushdown re-evaluates the
-      // GENERATOR expression inside the scan filter: every
-      // explode-based training featurize (char_ngrams_utf8,
-      // dsir_feature_buckets, transition pairs) ran twice per row
-      // (r14; plan excerpt in OPTIMIZATION_r14.md). The inferred
-      // size()>0 filter only saves empty-row Generate machinery
-      // here (explodes sit directly on scans), so it is a strict
-      // loss at any scale for expensive generators.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      // experiment knob (r14, default OFF): AQE replanning of cache
-      // materialization coalesces model-sized caches (helps compile-
-      // heavy queries ~0.5 s) but ALSO coalesces corpus-proportional
-      // caches at sf0.1 (dedup shingle tables, LM scored tables) and
-      // costs their downstream stages parallelism — measured net
-      // wash-to-negative (BenchOne A/B in OPTIMIZATION_r14.md), so
-      // the model-table fix is the surgical repartition(1) in the
-      // compile paths instead
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "false"))
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = Session.local()
       // write µs timestamps (not INT96) so the oracle compare sees
       // the same precision DuckDB produces.
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")

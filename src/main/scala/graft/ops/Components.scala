@@ -68,7 +68,7 @@ object Components {
     // it rides the SAME materialization job as the round's
     // localCheckpoint via observe() — r14: one action per round
     // where a separate aggregate job per round was pure scheduler
-    // overhead (ProbeQ: the loop queries are job-count-bound at gate
+    // overhead (a probe breakdown: the loop queries are job-count-bound at gate
     // scale). DECIMAL(38,0) keeps the sum exact at any
     // vertex-id/corpus scale (a Long sum could wrap, and a wrapped
     // collision would silently accept partial labels).

@@ -141,7 +141,7 @@ object Dsir {
     * bucket aggregate) collected at assembly and inlined as
     * literals, and the expensive featurize+aggregate subtree under
     * the model is evaluated exactly ONCE (the ratios join) instead
-    * of twice (r14: ProbeQ measured the second evaluation as a full
+    * of twice (r14: a probe breakdown measured the second evaluation as a full
     * ~2 s training stage of `model_dsir_chargram`). Literal scalars
     * keep the plan STABLE across invocations — unlike a checkpoint
     * of the model, which embeds a per-invocation RDD and defeats

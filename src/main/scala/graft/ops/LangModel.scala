@@ -231,7 +231,7 @@ object LangModel {
 
   // NOTE (r14): a one-pass fused trainer (explode every order's keys
   // in one aggregate) was built, spec-pinned identical, and REVERTED
-  // after a quiet-box BenchOne A/B: the three separate aggregates run
+  // after a quiet-box paired A/B: the three separate aggregates run
   // as CONCURRENT stages under the one compile action, so fusing them
   // into a single stage 3× as heavy per task LOSES wall on any box
   // with idle cores (model_lm_chargram_kernel 2.21 → 3.87 s median,

@@ -5,20 +5,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session). */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
+  /** The mains' shared conf ([[Session.builder]]) on `local[4]`, so
+    * the suite pins the same plans the bench runs. */
+  lazy val spark: SparkSession = Session.builder()
     .master("local[4]")
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.adaptive.enabled", "true")
-    // match the mains (r14): inferred generate-filters re-evaluate
-    // expensive generator expressions in scan filters — excluded
-    // everywhere so the suite pins the same plans the bench runs
-    .config("spark.sql.optimizer.excludedRules",
-      "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
     // bucketed-table tests register external tables; keep catalog
     // metadata out of the repo tree
     .config("spark.sql.warehouse.dir",

@@ -65,11 +65,12 @@ class ComponentsSpec extends SparkSpec {
 
   test("r15 batched star rounds ≡ min-label across seeds, densities " +
     "and odd/even convergence counts") {
-    // the r15 loop runs TWO star rounds per checkpoint+probe; the
-    // star forest of component minima is the unique fixpoint, so
-    // batching must not change any label — pinned against min-label
-    // propagation over graph shapes that converge after odd AND even
-    // round counts (sparse chains ∪ dense blobs ∪ isolated loops)
+    // each round is one large-star + small-star pass, one checkpoint
+    // and one convergence probe; the star forest of component minima
+    // is the unique fixpoint, so no round count changes a label —
+    // pinned against min-label propagation over graph shapes that
+    // converge after odd AND even round counts (sparse chains ∪ dense
+    // blobs ∪ isolated loops)
     for (seed <- Seq(1, 7, 13, 29); n <- Seq(17, 40)) {
       val rnd = new scala.util.Random(seed)
       val dense = Seq.fill(3 * n)(
@@ -85,10 +86,11 @@ class ComponentsSpec extends SparkSpec {
     }
   }
 
-  test("r15 batched star: odd maxIter still converges (single-round " +
-    "tail batch)") {
-    // maxIter=1 forces the doTwo=false path: a 2-vertex edge is a
-    // star forest after one round, so it must converge, not throw
+  test("star: maxIter=1 converges when one round already yields a " +
+    "star forest") {
+    // a 2-vertex edge is a star forest after one round, and the
+    // round's own probe detects it, so the loop must converge within
+    // its single allowed round, not throw
     val pairs = Seq((7L, 3L)).toDF("a", "b")
     val out = Components.connectedComponentsStar(pairs, "a", "b",
       maxIter = 1).as[(Long, Long)].collect().sortBy(_._1).toSeq

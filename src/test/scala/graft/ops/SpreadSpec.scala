@@ -36,17 +36,29 @@ class SpreadSpec extends SparkSpec {
     assert(Spread.auto(local) eq local)
   }
 
+  private def tmpDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).resolve("t").toString
+
   test("auto never coalesces: a frame already at/above the target " +
     "passes through") {
-    val docs = graft.Tables.load(spark, "/root/testdata/sf0.001",
-      "documents")
-    // force a wide repartition BELOW auto: the estimate probes the
-    // SCAN's split count, which is below target, so auto would widen
-    // — but the contract only promises never to coalesce, so assert
-    // on the repartitioned frame's floor
-    val wide = Spread.auto(docs).repartition(
-      spark.sparkContext.defaultParallelism)
-    assert(wide.rdd.getNumPartitions >=
-      math.max(1, spark.sparkContext.defaultParallelism / 2))
+    val target = math.max(1, spark.sparkContext.defaultParallelism / 2)
+    // many small files: the scan packs them into at least `target`
+    // tasks, so auto has nothing to widen
+    val dir = tmpDir("spread-wide")
+    spark.range(0, 4000).repartition(4 * target).write.parquet(dir)
+    val wide = spark.read.parquet(dir)
+    assert(wide.rdd.getNumPartitions >= target)
+    assert(Spread.auto(wide) eq wide)
+  }
+
+  test("auto passes a hive-partitioned scan through unwidened") {
+    // one file in one partition dir: a full-listing estimate would
+    // read 1 split and widen, but pruning and partition columns make
+    // that estimate unsafe, so partitioned relations are left alone
+    val dir = tmpDir("spread-part")
+    spark.range(0, 100).withColumn("p", lit(0)).coalesce(1)
+      .write.partitionBy("p").parquet(dir)
+    val part = spark.read.parquet(dir)
+    assert(Spread.auto(part) eq part)
   }
 }

@@ -13,8 +13,9 @@ BENCH_PIN.json:
 
   * model_* queries: >1.5x the pin is a CANDIDATE failure. Before
     exiting 1 the tool AUTO-ESCALATES to a clean re-measure
-    (graft.TimeQ min-of-two over exactly the failing queries) and
-    only a re-measure still over the ratio fails. Rationale (r13
+    (`graft.Measure time` over exactly the failing queries: Bench's
+    session, consume path and median-of-3) and only a re-measured
+    median still over the ratio fails. Rationale (r13
     verdict "What's wrong #1"): the spread test alone cannot tell
     sustained ambient load from a plan regression — a uniformly
     loaded box slows every sample by the same factor, producing a
@@ -29,10 +30,11 @@ BENCH_PIN.json:
     widen by editing HARD_PREFIXES once other families earn a pin.
 
 --no-remeasure restores the old behavior (candidate failures exit 1
-immediately) for contexts without sbt. BENCH_PIN_TIMEQ_CMD overrides
-the re-measure command (the selftest injects a scripted TimeQ); it
-receives the sf dir and the failing query names as arguments and
-must print `TIMEQ <name> <seconds>` lines.
+immediately) for contexts without sbt. BENCH_PIN_MEASURE_CMD
+overrides the re-measure command (the selftest injects a scripted
+Measure); it receives Measure's arguments (`time <q1,q2,...>`) with
+SPARK_GRAFT_SF_DIR in its environment and must print Measure's JSON
+lines (`{"query": ..., "median": ...}`).
 
 Adjudication history lives next to the pin in
 BENCH_PIN_ADJUDICATIONS.md — refresh the pin only for an ACCEPTED
@@ -43,7 +45,6 @@ deliberate, committed act rather than a silent drift.
 """
 import json
 import os
-import re
 import subprocess
 import sys
 
@@ -59,31 +60,39 @@ def load(path):
 
 
 def remeasure(names, sf_dir):
-    """Clean re-measure of `names` via graft.TimeQ (warmup +
-    min-of-two per query; the first query also absorbs JVM warmup).
-    Returns {name: seconds} for every TIMEQ line found; an empty
-    dict (command failed / nothing parsed) leaves the candidate
+    """Clean re-measure of `names` via `graft.Measure time` (warmup,
+    gc, median of 3 per query — Bench's statistic). Returns
+    {name: median seconds} for every Measure JSON line found; an
+    empty dict (command failed / nothing parsed) leaves the candidate
     failures standing — the escalation can only DOWNGRADE with
     actual evidence."""
-    override = os.environ.get("BENCH_PIN_TIMEQ_CMD")
+    args = ["time", ",".join(names)]
+    override = os.environ.get("BENCH_PIN_MEASURE_CMD")
     if override:
-        cmd = override.split() + [sf_dir] + names
+        cmd = override.split() + args
     else:
-        cmd = ["sbt", "-batch",
-               "runMain graft.TimeQ " + " ".join([sf_dir] + names)]
+        cmd = ["sbt", "-batch", "runMain graft.Measure " + " ".join(args)]
     print(f"escalating {len(names)} candidate failure(s) to a clean "
           f"re-measure: {' '.join(cmd[:3])} ...")
     try:
         out = subprocess.run(cmd, capture_output=True, text=True,
-                             timeout=1800).stdout
+                             timeout=1800,
+                             env=dict(os.environ,
+                                      SPARK_GRAFT_SF_DIR=sf_dir)).stdout
     except (OSError, subprocess.TimeoutExpired) as e:
         print(f"re-measure failed to run ({e}); candidates stand")
         return {}
     got = {}
-    for m in re.finditer(r"TIMEQ (\S+) ([0-9.]+)", out):
-        got[m.group(1)] = float(m.group(2))
+    for line in out.splitlines():
+        if not line.startswith('{"query"'):
+            continue
+        try:
+            rec = json.loads(line)
+            got[rec["query"]] = float(rec["median"])
+        except (ValueError, KeyError, TypeError):
+            continue
     if not got:
-        print("re-measure produced no TIMEQ lines; candidates stand")
+        print("re-measure produced no Measure lines; candidates stand")
     return got
 
 
@@ -146,7 +155,7 @@ def main(argv):
         for n, now, ref, line in to_measure:
             if spread.get(n, 0.0) > NOISE_SPREAD:
                 print(f"NOISY {line} — over pin but spread marks "
-                      "contention; re-measure (TimeQ) before accepting")
+                      "contention; re-measure (Measure time) before accepting")
             else:
                 failures.append(line)
     elif to_measure:

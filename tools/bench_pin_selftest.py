@@ -16,16 +16,22 @@ import tempfile
 HERE = os.path.dirname(os.path.abspath(__file__))
 PIN_TOOL = os.path.join(HERE, "bench_pin.py")
 
-FAKE_TIMEQ = """\
-import sys
-# argv: <seconds> <sf_dir> <query...> -> one TIMEQ line per query
+FAKE_MEASURE = """\
+import json, os, sys
+# argv: <seconds> time <q1,q2,...> -> one Measure JSON line per query
 sec = float(sys.argv[1])
-for name in sys.argv[3:]:
-    print(f"TIMEQ {name} {sec:.3f}")
+assert sys.argv[2] == "time", sys.argv
+for name in sys.argv[3].split(","):
+    print("sbt noise before the result line")
+    print(json.dumps({"query": name, "reps": 3,
+                      "samples": [sec * 0.9, sec, sec * 1.2],
+                      "min": sec * 0.9, "median": sec, "max": sec * 1.2,
+                      "sf": os.environ["SPARK_GRAFT_SF_DIR"]},
+                     separators=(",", ":")))
 """
 
 
-def run_case(tmp, dump, pin, spread, timeq_sec, extra_args=()):
+def run_case(tmp, dump, pin, spread, measure_sec, extra_args=()):
     dp = os.path.join(tmp, "dump.json")
     pp = os.path.join(tmp, "pin.json")
     sp = os.path.join(tmp, "dump.spread.json")
@@ -35,13 +41,13 @@ def run_case(tmp, dump, pin, spread, timeq_sec, extra_args=()):
         json.dump(pin, f)
     with open(sp, "w") as f:
         json.dump(spread, f)
-    fake = os.path.join(tmp, "fake_timeq.py")
+    fake = os.path.join(tmp, "fake_measure.py")
     with open(fake, "w") as f:
-        f.write(FAKE_TIMEQ)
+        f.write(FAKE_MEASURE)
     env = dict(os.environ)
-    if timeq_sec is not None:
-        env["BENCH_PIN_TIMEQ_CMD"] = \
-            f"{sys.executable} {fake} {timeq_sec}"
+    if measure_sec is not None:
+        env["BENCH_PIN_MEASURE_CMD"] = \
+            f"{sys.executable} {fake} {measure_sec}"
     r = subprocess.run(
         [sys.executable, PIN_TOOL, *extra_args, dp, pp],
         capture_output=True, text=True, env=env)
@@ -63,7 +69,7 @@ def main():
         # 1. loaded box: 2x pin, clean spread, re-measure UNDER pin
         code, out = run_case(
             tmp, {"model_x": 4.0, "q_other": 1.0}, pin,
-            {"model_x": 0.2}, timeq_sec=2.1)
+            {"model_x": 0.2}, measure_sec=2.1)
         check("loaded-box dump clears via re-measure", code, 0, out)
         if "CLEAR" not in out:
             failures.append(f"expected CLEAR line, got:\n{out}")
@@ -71,13 +77,13 @@ def main():
         # 2. genuine regression: re-measure confirms over pin
         code, out = run_case(
             tmp, {"model_x": 4.0, "q_other": 1.0}, pin,
-            {"model_x": 0.2}, timeq_sec=4.2)
+            {"model_x": 0.2}, measure_sec=4.2)
         check("confirmed regression fails", code, 1, out)
 
         # 3. --no-remeasure restores the immediate-fail behavior
         code, out = run_case(
             tmp, {"model_x": 4.0, "q_other": 1.0}, pin,
-            {"model_x": 0.2}, timeq_sec=2.1,
+            {"model_x": 0.2}, measure_sec=2.1,
             extra_args=("--no-remeasure",))
         check("--no-remeasure fails without escalating", code, 1, out)
 
@@ -85,24 +91,24 @@ def main():
         #    fails (the old tool could never fail a noisy query)
         code, out = run_case(
             tmp, {"model_x": 4.0, "q_other": 1.0}, pin,
-            {"model_x": 0.9}, timeq_sec=4.2)
+            {"model_x": 0.9}, measure_sec=4.2)
         check("noisy + confirming re-measure fails", code, 1, out)
 
         # 5. noisy + clearing re-measure passes
         code, out = run_case(
             tmp, {"model_x": 4.0, "q_other": 1.0}, pin,
-            {"model_x": 0.9}, timeq_sec=1.9)
+            {"model_x": 0.9}, measure_sec=1.9)
         check("noisy + clearing re-measure passes", code, 0, out)
 
         # 6. pinned-but-absent cannot be re-measured away
         code, out = run_case(
-            tmp, {"q_other": 1.0}, pin, {}, timeq_sec=0.1)
+            tmp, {"q_other": 1.0}, pin, {}, measure_sec=0.1)
         check("absent pinned query fails", code, 1, out)
 
         # 7. non-model movers stay warnings
         code, out = run_case(
             tmp, {"model_x": 2.0, "q_other": 9.0}, pin,
-            {}, timeq_sec=None)
+            {}, measure_sec=None)
         check("non-model mover warns only", code, 0, out)
         if "WARN" not in out:
             failures.append(f"expected WARN line, got:\n{out}")
@@ -110,8 +116,20 @@ def main():
         # 8. within-pin dump touches no escalation at all
         code, out = run_case(
             tmp, {"model_x": 2.1, "q_other": 1.0}, pin,
-            {}, timeq_sec=None)
+            {}, measure_sec=None)
         check("clean dump passes without re-measure", code, 0, out)
+
+        # 9. the re-measure is judged on its median (Bench's
+        #    statistic): min under the ratio but median over it fails,
+        #    max over the ratio but median under it clears
+        code, out = run_case(
+            tmp, {"model_x": 4.0, "q_other": 1.0}, pin,
+            {"model_x": 0.2}, measure_sec=3.2)
+        check("re-measured median over pin fails", code, 1, out)
+        code, out = run_case(
+            tmp, {"model_x": 4.0, "q_other": 1.0}, pin,
+            {"model_x": 0.2}, measure_sec=2.8)
+        check("re-measured median under pin clears", code, 0, out)
 
     if failures:
         print("\n".join(failures))
