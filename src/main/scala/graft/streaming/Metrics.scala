@@ -45,7 +45,10 @@ object Metrics {
     // ≙ DelayReadTime / DelayWriteTime gauges (metrics/metrics.go:
     // 25-37): read delay = wall clock − newest event time in the
     // batch (how far the tail lags the source); write delay = the
-    // sink's addBatch duration (how long the destination write took)
+    // sink's addBatch duration (how long the destination write took).
+    // A batch's target tables write concurrently, so that is the
+    // slowest target's route→compact→write chain, not the sum of the
+    // sink writes.
     @volatile var lastReadDelaySeconds: Double = 0.0
     @volatile var lastWriteDelaySeconds: Double = 0.0
 

@@ -1,6 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.util.concurrent.{ConcurrentLinkedQueue, ExecutionException,
+  ExecutorService, Executors, ThreadFactory}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.classic
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -24,6 +33,11 @@ import graft.operators.{Compactor, Transforms}
   *  - DDL: a registry-refresh callback; the streaming query restarts
   *    per schema version (SURVEY §3.2) — orchestrated outside the
   *    query itself.
+  *  - concurrency: the reference runs one writer goroutine per sink
+  *    (SURVEY §3.1, `parallel-workers`). Here a batch's routes are
+  *    grouped by target table; groups write concurrently, the routes
+  *    of one group run in declaration order, and the batch's offsets
+  *    commit only after every group has finished ([[inParallel]]).
   */
 object Pipeline {
 
@@ -93,18 +107,107 @@ object Pipeline {
 
   /** One micro-batch: route → transform → compact → sink, per route.
     * The batch is persisted once so N routes don't rescan the
-    * source. */
+    * source. Routes sharing a target form one group and run in order
+    * (two merges into one table would both read its pre-batch state);
+    * distinct targets run concurrently. */
   def processBatch(batch: DataFrame, routes: Seq[Route], sink: BatchSink,
       batchId: Long): Unit = {
     if (routes.size > 1) batch.persist()
     try {
-      routes.foreach { r =>
-        val typed = Transforms.chain(r.transforms: _*)(routed(batch, r))
-        val compact = compacted(typed, r.target)
-        sink.write(compact, r.target, batchId)
-      }
+      val groups = byTarget(routes)(r => (r.target.schema, r.target.name))
+      inParallel(batch.sparkSession, groups.map { group => () =>
+        group.foreach { r =>
+          val typed = Transforms.chain(r.transforms: _*)(routed(batch, r))
+          val compact = compacted(typed, r.target)
+          sink.write(compact, r.target, batchId)
+        }
+      })
     } finally {
       if (routes.size > 1) batch.unpersist()
+    }
+  }
+
+  /** `items` grouped by `key`, groups and members in declaration
+    * order. */
+  private[streaming] def byTarget[A](items: Seq[A])(
+      key: A => (String, String)): Seq[Seq[A]] =
+    items.map(key).distinct.map(k => items.filter(key(_) == k))
+
+  /** Daemon threads shared by every query's batches; idle ones expire.
+    * They inherit no thread-locals from the batch that created them,
+    * so an idle thread pins no stream's session or local properties;
+    * [[inParallel]] sets both for each task. */
+  private lazy val routePool: ExecutorService = {
+    val n = new AtomicInteger
+    Executors.newCachedThreadPool(new ThreadFactory {
+      def newThread(r: Runnable): Thread = {
+        val t = new Thread(null, r, s"graft-route-${n.getAndIncrement()}",
+          0, false)
+        t.setDaemon(true)
+        t
+      }
+    })
+  }
+
+  /** Run `tasks` concurrently, at most `defaultParallelism` at a time;
+    * a single task runs inline on the calling thread.
+    *
+    * Each worker carries the caller's Spark thread-locals
+    * (`SQLExecution.withThreadLocalCaptured`): job group and streaming
+    * query id (so `query.stop()` cancels its jobs), active session and
+    * SQL conf. The caller's `spark.sql.execution.id` is dropped, so
+    * every action starts its own execution as it would inline.
+    *
+    * Returns or throws only after every task has finished — also when
+    * the calling thread is interrupted, which interrupts the workers
+    * and starts no further task. Throws the first failure, the others
+    * attached as suppressed. */
+  private[streaming] def inParallel(session: SparkSession,
+      tasks: Seq[() => Unit]): Unit = {
+    if (tasks.size <= 1) { tasks.foreach(_()); return }
+    val sc = session.sparkContext
+    val queue = new ConcurrentLinkedQueue[() => Unit](tasks.asJava)
+    val failures = new ConcurrentLinkedQueue[Throwable]
+    val halted = new AtomicBoolean(false)
+    // guarded by itself: a worker leaves it (and clears any interrupt
+    // aimed at it) atomically, so a pooled thread never carries an
+    // interrupt into another batch
+    val running = mutable.Set.empty[Thread]
+    def work(): Unit = {
+      sc.setLocalProperty(SQLExecution.EXECUTION_ID_KEY, null)
+      val me = Thread.currentThread()
+      running.synchronized(running += me)
+      try {
+        var task: () => Unit = null
+        while (!halted.get && { task = queue.poll(); task != null }) task()
+      } catch {
+        case e: Throwable => halted.set(true); failures.add(e)
+      } finally running.synchronized { running -= me; Thread.interrupted() }
+    }
+    val width = math.min(tasks.size, sc.defaultParallelism)
+    val workers = (1 to width).map(_ =>
+      SQLExecution.withThreadLocalCaptured(
+        session.asInstanceOf[classic.SparkSession], routePool)(work()))
+    var interrupted: Option[InterruptedException] = None
+    workers.foreach { w =>
+      var done = false
+      while (!done) {
+        try { w.get(); done = true }
+        catch {
+          case e: InterruptedException => if (interrupted.isEmpty) {
+            interrupted = Some(e)
+            halted.set(true)
+            running.synchronized(running.foreach(_.interrupt()))
+          }
+          case e: ExecutionException =>
+            failures.add(Option(e.getCause).getOrElse(e)); done = true
+        }
+      }
+    }
+    val all = interrupted.toSeq ++ failures.asScala
+    all.headOption.foreach { first =>
+      all.tail.foreach(first.addSuppressed)
+      throw first
     }
   }
 

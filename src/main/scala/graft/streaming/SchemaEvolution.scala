@@ -104,8 +104,10 @@ object SchemaEvolution {
   }
 
   /** foreachBatch body with evolution: DDL first (registry update +
-    * optional target forwarding), then per-table version-pinned
-    * routing → compaction → sink. `forward` defaults to a no-op —
+    * optional target forwarding, on the calling thread), then per-table
+    * version-pinned routing → compaction → sink, tables sharing a
+    * target in order and distinct targets concurrently (as
+    * [[Pipeline.processBatch]]). `forward` defaults to a no-op —
     * pass a route-gated closure (e.g. wrapping
     * [[graft.sinks.JdbcDdlForwarder]]) to emit target ALTERs before
     * the DML lands. */
@@ -119,17 +121,21 @@ object SchemaEvolution {
     batch.persist()
     try {
       applyDdl(batch, registry, forward)
-      tables.foreach { case (db, table) =>
-        registry.current(db, table).foreach { t =>
-          val typed = routedVersioned(batch, db, table, registry)
-          // the sink names its destination from the TableDef — apply
-          // the route's target-rename so DML lands where the
-          // forwarded DDL went, not under the source's name
-          val (tdb, ttable) = targetNames.getOrElse((db, table), (db, table))
-          val target = t.copy(schema = tdb, name = ttable)
-          sink.write(Pipeline.compacted(typed, t), target, batchId)
+      // the sink names its destination from the TableDef — apply the
+      // route's target-rename so DML lands where the forwarded DDL
+      // went, not under the source's name
+      def targetOf(st: (String, String)) = targetNames.getOrElse(st, st)
+      val groups = Pipeline.byTarget(tables)(targetOf)
+      Pipeline.inParallel(batch.sparkSession, groups.map { group => () =>
+        group.foreach { case (db, table) =>
+          registry.current(db, table).foreach { t =>
+            val typed = routedVersioned(batch, db, table, registry)
+            val (tdb, ttable) = targetOf((db, table))
+            val target = t.copy(schema = tdb, name = ttable)
+            sink.write(Pipeline.compacted(typed, t), target, batchId)
+          }
         }
-      }
+      })
     } finally batch.unpersist()
   }
 }

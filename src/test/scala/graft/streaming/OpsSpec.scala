@@ -84,6 +84,40 @@ class OpsSpec extends SparkSpec {
     } finally spark.streams.removeListener(collector)
   }
 
+  test("metrics: read counters stay exact when three routes write concurrently") {
+    val logDir = Files.createTempDirectory("m3-log").toString
+    val ckpt = Files.createTempDirectory("m3-ckpt").toString
+    val sinkDir = Files.createTempDirectory("m3-sink").toString
+    val tables = Seq("t1", "t2", "t3")
+    val lines = (0 until 60).map { i =>
+      val op = if (i % 7 == 0) "delete" else "insert"
+      s"""{"db":"db1","table":"${tables(i % 3)}","op":"$op","ts":${1700000000000L + i},"pos":"g:$i","seq":$i,"tableVersion":0,"after":{"id":"${i / 3}","k":"$i","c":"x"},"before":null}"""
+    }
+    Files.write(Paths.get(logDir, "s.jsonl"), lines.mkString("\n").getBytes("UTF-8"))
+    val deletes = (0 until 60).count(_ % 7 == 0).toLong
+
+    val collector = new Metrics.Collector
+    spark.streams.addListener(collector)
+    try {
+      val env = Metrics.observed(
+        Registry.source("changelog", spark, Map("path" -> logDir)))
+      val routes = tables.map(t => Pipeline.Route("db1", t, target.copy(name = t)))
+      val q = Pipeline.start(env, routes, new ParquetUpsertSink(sinkDir), ckpt,
+        trigger = Trigger.AvailableNow())
+      q.awaitTermination(120000)
+      assert(q.exception.isEmpty, q.exception)
+      var tries = 0
+      while (collector.rowsRead.sum() < 60 && tries < 50) {
+        Thread.sleep(100); tries += 1
+      }
+      Thread.sleep(300) // a double count would arrive late, not early
+      val snap = collector.snapshot
+      assert(snap("rows_read_total") == 60L)
+      assert(snap("deletes_read_total") == deletes)
+      tables.foreach(t => assert(Files.isDirectory(Paths.get(sinkDir, s"db1.$t"))))
+    } finally spark.streams.removeListener(collector)
+  }
+
   test("metrics HTTP endpoint serves Prometheus text format (≙ :7716/metrics)") {
     val collector = new Metrics.Collector
     collector.rowsRead.add(42)

@@ -1,10 +1,16 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
+import scala.jdk.CollectionConverters._
+import scala.util.Random
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 
 import graft.SparkSpec
 import graft.cdc.ChangeEvent
@@ -16,6 +22,7 @@ import graft.sinks.ParquetUpsertSink
   * → route → transform → compact → parquet upsert sink, asserted
   * against the naively-applied oracle state. */
 class PipelineSpec extends SparkSpec {
+  import PipelineSpec._
   import spark.implicits._
 
   private val target = TableDef("db1", "t1", Seq(
@@ -92,5 +99,203 @@ class PipelineSpec extends SparkSpec {
       Pipeline.retry(tries = 2, backoffMs = 1) { m += 1; sys.error("always") }
     }
     assert(ex.getMessage == "always" && m == 2)
+  }
+
+  private def tableDef(name: String) = target.copy(name = name)
+
+  private def stateOf(dir: String, t: String): Seq[(Long, Int, String)] =
+    spark.read.parquet(s"$dir/db1.$t")
+      .select($"id", $"k", $"c").as[(Long, Int, String)].collect()
+      .toSeq.sortBy(_._1)
+
+  /** Four routes onto their own targets plus two sources onto one
+    * shared target, all in one batch. */
+  private val distinct = Seq("t1", "t2", "t3", "t4")
+  private val multiRoutes =
+    distinct.map(t => Pipeline.Route("db1", t, tableDef(t))) ++
+      Seq("s_a", "s_b").map(s => Pipeline.Route("db1", s, tableDef("shared")))
+
+  /** Random insert/update/delete traffic over small key spaces. The
+    * shared target's keys overlap across its two sources, and every
+    * `s_b` event follows every `s_a` event, so applying the routes in
+    * declaration order is the same as applying the events by `seq`. */
+  private def multiLog(seed: Long): Seq[ChangeEvent] = {
+    val rnd = new Random(seed)
+    var seq = 0L
+    def next(table: String, keys: Range): ChangeEvent = {
+      seq += 1
+      val op = Seq("insert", "update", "delete")(rnd.nextInt(3))
+      val id = keys(rnd.nextInt(keys.size)).toLong
+      ev(op, seq, id, rnd.nextInt(1000), s"$table-$seq", table)
+    }
+    (0 until 60).flatMap { i =>
+      distinct.map(next(_, 1 to 8)) :+
+        (if (i < 30) next("s_a", 1 to 10) else next("s_b", 5 to 15))
+    }
+  }
+
+  /** Last state per target: every event applied in `seq` order. */
+  private def oracle(log: Seq[ChangeEvent]): Map[String, Seq[(Long, Int, String)]] = {
+    val targetOf = Map("s_a" -> "shared", "s_b" -> "shared").withDefault(identity)
+    log.groupBy(e => targetOf(e.table)).map { case (t, evs) =>
+      val state = evs.sortBy(_.seq).foldLeft(Map.empty[Long, (Long, Int, String)]) {
+        (m, e) =>
+          val id = e.after("id").toLong
+          if (e.op == "delete") m - id
+          else m + (id -> (id, e.after("k").toInt, e.after("c")))
+      }
+      t -> state.values.toSeq.sortBy(_._1)
+    }
+  }
+
+  private def drain(mem: MemoryStream[ChangeEvent], routes: Seq[Pipeline.Route],
+      sink: Pipeline.BatchSink, ckpt: String) = {
+    val q = Pipeline.start(mem.toDF(), routes, sink, ckpt,
+      trigger = Trigger.AvailableNow())
+    // a failed query rethrows here; callers inspect q.exception
+    try q.awaitTermination(120000)
+    catch { case _: StreamingQueryException => () }
+    q
+  }
+
+  test("multi-route batch: concurrent targets and a shared target equal the oracle") {
+    val dir = Files.createTempDirectory("graft-multi").toString
+    val ckpt = Files.createTempDirectory("graft-multi-ckpt").toString
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[ChangeEvent]
+    val log = multiLog(7)
+    mem.addData(log: _*)
+    val q = drain(mem, multiRoutes, new ParquetUpsertSink(dir), ckpt)
+    assert(q.exception.isEmpty, q.exception)
+    assert(Files.exists(Paths.get(ckpt, "commits", "0")))
+    val want = oracle(log)
+    assert(want("shared").nonEmpty)
+    (distinct :+ "shared").foreach { t =>
+      assert(stateOf(dir, t) == want(t), s"target $t")
+    }
+  }
+
+  test("multi-route batch: a failing target fails the batch with its own " +
+      "exception after every group finished; a restart converges") {
+    val dir = Files.createTempDirectory("graft-fail").toString
+    val ckpt = Files.createTempDirectory("graft-fail-ckpt").toString
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[ChangeEvent]
+    val log = multiLog(11)
+    mem.addData(log: _*)
+
+    // direct call: the sink's own exception type, and every sleeping
+    // group's write landed before processBatch threw
+    val failing = new RecordingSink(new ParquetUpsertSink(
+      Files.createTempDirectory("graft-fail-direct").toString),
+      failOn = Some("t2"), sleepMs = 400)
+    intercept[SinkBoom] {
+      Pipeline.processBatch(log.toDF(), multiRoutes, failing, 0L)
+    }
+    val atThrow = failing.log.asScala.toVector
+    assert(failing.inFlight.get == 0)
+    assert(atThrow.exists(_.table == "t1"))
+    Thread.sleep(600)
+    assert(failing.log.asScala.toVector == atThrow)
+
+    // through the query: no commit for the failed batch
+    val q = drain(mem, multiRoutes, new RecordingSink(new ParquetUpsertSink(dir),
+      failOn = Some("t2"), sleepMs = 100), ckpt)
+    val err = q.exception.getOrElse(fail("the batch should have failed"))
+    val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(_.isInstanceOf[SinkBoom]), err)
+    assert(!chain.exists(_.isInstanceOf[java.util.concurrent.ExecutionException]), err)
+    assert(!Files.exists(Paths.get(ckpt, "commits", "0")))
+
+    // restart with a healthy sink ≡ a clean drain
+    val q2 = drain(mem, multiRoutes, new ParquetUpsertSink(dir), ckpt)
+    assert(q2.exception.isEmpty, q2.exception)
+    val cleanDir = Files.createTempDirectory("graft-clean").toString
+    drain(mem, multiRoutes, new ParquetUpsertSink(cleanDir),
+      Files.createTempDirectory("graft-clean-ckpt").toString)
+    val want = oracle(log)
+    (distinct :+ "shared").foreach { t =>
+      assert(stateOf(dir, t) == stateOf(cleanDir, t), s"target $t")
+      assert(stateOf(dir, t) == want(t), s"target $t")
+    }
+  }
+
+  test("multi-route batch: query.stop() returns only after every group finished") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[ChangeEvent]
+    mem.addData(multiLog(13): _*)
+    val sink = new RecordingSink(new ParquetUpsertSink(
+      Files.createTempDirectory("graft-stop").toString), sleepMs = 30000)
+    val q = Pipeline.start(mem.toDF(), multiRoutes, sink,
+      Files.createTempDirectory("graft-stop-ckpt").toString,
+      trigger = Trigger.AvailableNow())
+    // four groups in flight at once (local[4]), each inside its write
+    assert(sink.entered.await(60, TimeUnit.SECONDS))
+    val t0 = System.nanoTime()
+    q.stop()
+    val stopS = (System.nanoTime() - t0) / 1e9
+    assert(sink.inFlight.get == 0)
+    val atStop = sink.log.asScala.toVector
+    Thread.sleep(500)
+    assert(sink.inFlight.get == 0 && sink.log.asScala.toVector == atStop)
+    assert(stopS < 30, s"stop took $stopS s")
+  }
+
+  test("multi-route batch: sink writes see the stream thread's Spark thread-locals") {
+    implicit val sqlCtx = spark.sqlContext
+    // two queries in a row: the second runs on pooled threads the
+    // first created, so nothing passes by thread inheritance alone
+    (1 to 2).foreach { n =>
+      val mem = MemoryStream[ChangeEvent]
+      mem.addData(multiLog(17 + n): _*)
+      val sink = new RecordingSink(new ParquetUpsertSink(
+        Files.createTempDirectory("graft-tl").toString))
+      val q = drain(mem, multiRoutes, sink,
+        Files.createTempDirectory("graft-tl-ckpt").toString)
+      assert(q.exception.isEmpty, q.exception)
+      val writes = sink.log.asScala.toVector
+      assert(writes.map(_.table).toSet == (distinct :+ "shared").toSet)
+      writes.foreach { w =>
+        assert(w.thread.startsWith("graft-route-"), w)
+        assert(w.jobGroup == q.runId.toString, w)
+        assert(w.queryId == q.id.toString, w)
+        assert(w.activeIsBatchSession, w)
+        assert(w.executionId == null, w)
+      }
+    }
+  }
+}
+
+object PipelineSpec {
+  final class SinkBoom(msg: String) extends RuntimeException(msg)
+
+  final case class Write(table: String, thread: String, jobGroup: String,
+      queryId: String, executionId: String, activeIsBatchSession: Boolean)
+
+  /** Wraps `real`: records each write with the Spark thread-locals seen
+    * at entry, throws [[SinkBoom]] on `failOn`, and sleeps `sleepMs`
+    * before every other write. */
+  final class RecordingSink(real: Pipeline.BatchSink,
+      failOn: Option[String] = None, sleepMs: Long = 0) extends Pipeline.BatchSink {
+    val log = new ConcurrentLinkedQueue[Write]
+    val inFlight = new java.util.concurrent.atomic.AtomicInteger
+    val entered = new CountDownLatch(4)
+
+    def write(batch: DataFrame, t: TableDef, batchId: Long): Unit = {
+      val sc = batch.sparkSession.sparkContext
+      val seen = Write(t.name, Thread.currentThread().getName,
+        sc.getLocalProperty("spark.jobGroup.id"),
+        sc.getLocalProperty("sql.streaming.queryId"),
+        sc.getLocalProperty("spark.sql.execution.id"),
+        SparkSession.getActiveSession.exists(_ eq batch.sparkSession))
+      inFlight.incrementAndGet()
+      entered.countDown()
+      try {
+        if (failOn.contains(t.name)) throw new SinkBoom(s"${t.name} refused")
+        Thread.sleep(sleepMs)
+        real.write(batch, t, batchId)
+        log.add(seen)
+      } finally inFlight.decrementAndGet()
+    }
   }
 }
