@@ -35,8 +35,10 @@ import graft.streaming.{Metrics, MetricsHttp, Pipeline, Registry}
   *    `evolve = "true"`: in-stream DDL updates the registry
   *    (version-pinned decode, no restart) and — with
   *    `forward-ddl-url` (+ `forward-ddl-dialect`/`-user`/`-password`)
-  *    — forwards column-level ALTERs to the JDBC target before the
-  *    carrying batch's DML lands
+  *    — forwards column-level ALTERs to each route's JDBC target
+  *    before the carrying batch's DML lands. Evolving routes take no
+  *    transforms or column mappers; a router whose target is not
+  *    registered lands the source's shape under the target's name
   *
   * `--available-now` drains the backlog and exits 0 — the
   * catch-up-then-exit replay mode; without it the daemon runs on the
@@ -119,65 +121,36 @@ object Main {
     // silently re-ingest or skip the outage window on every restart
     val checkpoint = opts.getOrElse("checkpoint",
       Paths.get(configPath).toAbsolutePath.toString + ".checkpoint")
-    // `[meta] evolve = "true"`: run the schema-evolution batch body —
-    // in-stream DDL applies to the registry (version-pinned decode,
-    // no restart) and optionally FORWARDS to a JDBC target
-    // (`forward-ddl-url` + `forward-ddl-dialect`/-user/-password) so
-    // the target ALTERs before the same batch's DML lands. The DDL
-    // connection is deliberately separate from the data path — e.g.
-    // StarRocks/Doris take data over stream-load HTTP but DDL over
-    // their MySQL-protocol FE port.
-    val evolve = conf.meta.get("evolve").exists(_.toString.toBoolean)
-    val query = if (!evolve) {
-      Pipeline.start(envelope, conf.routes(registry), sink, checkpoint, trigger)
-    } else {
-      require(conf.transforms.isEmpty &&
-        conf.routers.forall(_.sourceColumns.isEmpty),
-        "[meta] evolve=true does not compose with transforms/column " +
-          "mappers yet — evolution routes project through the registry")
-      val pairs = conf.routers.map(r => (r.sourceDb, r.sourceTable)).distinct
-      // DML must land under the ROUTE'S TARGET name — the same table
-      // the forwarded DDL alters — not the source's
-      val targetNames = conf.routers.map(r =>
-        (r.sourceDb, r.sourceTable) -> (r.targetDb, r.targetTable)).toMap
-      val forward: (String, graft.meta.DdlStatement) => Unit =
-        conf.meta.get("forward-ddl-url").map(_.toString) match {
-          case Some(url) =>
-            val dialect = graft.sinks.DdlForward.dialect(
-              conf.meta.getOrElse("forward-ddl-dialect", "mysql").toString)
-            // credentials only when configured: a default user would
-            // change the target's DEFAULT SCHEMA on engines that
-            // derive it from the login (Derby: user "root" ⇒ schema
-            // ROOT) and break unqualified table resolution
-            val props = new java.util.Properties()
-            conf.meta.get("forward-ddl-user")
-              .foreach(u => props.setProperty("user", u.toString))
-            conf.meta.get("forward-ddl-password")
-              .foreach(p => props.setProperty("password", p.toString))
-            val fwd = new graft.sinks.JdbcDdlForwarder(
-              () => java.sql.DriverManager.getConnection(url, props), dialect)
-            (db, stmt) => conf.routers
-              .filter(r => r.sourceDb == db && r.sourceTable == stmt.table)
-              .foreach { r =>
-                val landed = fwd.forward(stmt,
-                  graft.meta.TableDef(r.targetDb, r.targetTable, Nil))
-                if (!landed) System.err.println(
-                  s"[graft] DDL on ${r.targetDb}.${r.targetTable} not " +
-                    "expressible in the target dialect — registry updated; " +
-                    "apply the target ALTER via the per-version restart runbook")
-              }
-          case None => (_, _) => ()
+    // `[meta] evolve = "true"`: the batch body applies in-stream DDL to
+    // the registry (version-pinned decode, no restart) and optionally
+    // FORWARDS it to a JDBC target (`forward-ddl-url` +
+    // `forward-ddl-dialect`/-user/-password), so each route's target
+    // ALTERs before the same batch's DML lands. The DDL connection is
+    // deliberately separate from the data path — e.g. StarRocks/Doris
+    // take data over stream-load HTTP but DDL over their
+    // MySQL-protocol FE port.
+    val evolution = Option.when(
+        conf.meta.get("evolve").exists(_.toString.toBoolean)) {
+      conf.meta.get("forward-ddl-url").map(_.toString)
+        .fold(Pipeline.Evolution(registry)) { url =>
+          val dialect = graft.sinks.DdlForward.dialect(
+            conf.meta.getOrElse("forward-ddl-dialect", "mysql").toString)
+          // credentials only when configured: a default user would
+          // change the target's DEFAULT SCHEMA on engines that
+          // derive it from the login (Derby: user "root" ⇒ schema
+          // ROOT) and break unqualified table resolution
+          val props = new java.util.Properties()
+          conf.meta.get("forward-ddl-user")
+            .foreach(u => props.setProperty("user", u.toString))
+          conf.meta.get("forward-ddl-password")
+            .foreach(p => props.setProperty("password", p.toString))
+          Pipeline.Evolution(registry, new graft.sinks.JdbcDdlForwarder(
+            () => java.sql.DriverManager.getConnection(url, props),
+            dialect).forward)
         }
-      envelope.writeStream
-        .queryName("graft-cdc-evolve")
-        .option("checkpointLocation", checkpoint)
-        .trigger(trigger)
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          graft.streaming.SchemaEvolution.processBatch(
-            b, registry, pairs, sink, id, forward, targetNames)
-        }
-        .start()
     }
+    val query = Pipeline.start(envelope, conf.routes(registry), sink,
+      checkpoint, trigger, evolution)
 
     sys.addShutdownHook {
       try query.stop() catch { case scala.util.control.NonFatal(_) => () }

@@ -62,14 +62,18 @@ final case class PipelineConfig(
     * list before the mapper zip). Target schemas resolve from the
     * registry (≙ output LoadMeta); when a SOURCE schema is also
     * registered, the envelope projects onto it first so transforms
-    * see the source's column names. The mapper preserves the
-    * pipeline's op/seq/pos metadata columns. */
+    * see the source's column names. A router without a mapper whose
+    * target is not registered lands the source's columns under the
+    * target's name. The mapper preserves the pipeline's op/seq/pos
+    * metadata columns. */
   def routes(registry: SchemaRegistry): Seq[Pipeline.Route] =
     routers.map { r =>
-      val target = registry.current(r.targetDb, r.targetTable).getOrElse(
-        throw new IllegalArgumentException(
-          s"no schema registered for ${r.targetDb}.${r.targetTable}"))
       val source = registry.current(r.sourceDb, r.sourceTable)
+      val target = registry.current(r.targetDb, r.targetTable)
+        .orElse(source.filter(_ => r.sourceColumns.isEmpty)
+          .map(_.copy(schema = r.targetDb, name = r.targetTable)))
+        .getOrElse(throw new IllegalArgumentException(
+          s"no schema registered for ${r.targetDb}.${r.targetTable}"))
       val matched = transforms.filter(t =>
         t.matchDb == r.sourceDb && t.matchTable == r.sourceTable)
       val mapper: Seq[DataFrame => DataFrame] =

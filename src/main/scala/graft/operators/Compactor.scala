@@ -15,8 +15,7 @@ import org.apache.spark.sql.functions._
   * idempotent under at-least-once replay.
   *
   * Scale note: one shuffle on the PK (hash partition), then a
-  * per-partition window. With AQE on, skewed keys are split; for a
-  * known-hot keyspace pre-salt with [[saltedLastEventPerKey]].
+  * per-partition window. With AQE on, skewed keys are split.
   */
 object Compactor {
 

@@ -13,7 +13,7 @@ import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.meta.TableDef
+import graft.meta.{DdlStatement, SchemaRegistry, TableDef}
 import graft.operators.{Compactor, Transforms}
 
 /** CDC pipeline assembly ≙ `app/server.go:26-92,158-166`:
@@ -30,9 +30,13 @@ import graft.operators.{Compactor, Transforms}
   *    checkpoint dir (≙ GTID bbolt persistence,
   *    `inputs/mysql/mysql_position.go:150-170`); sinks must be
   *    idempotent by PK, which compacted upserts are.
-  *  - DDL: a registry-refresh callback; the streaming query restarts
-  *    per schema version (SURVEY §3.2) — orchestrated outside the
-  *    query itself.
+  *  - DDL: one batch body for both modes. Given an [[Evolution]],
+  *    each batch first applies its in-stream DDL to the registry and
+  *    forwards it to the routes' targets, then types every route
+  *    through the schema version its rows are pinned to — no restart
+  *    per schema version (SURVEY §3.2; see [[SchemaEvolution]]).
+  *    Without one, routes type through their fixed `TableDef`s and
+  *    DDL events are dropped.
   *  - concurrency: the reference runs one writer goroutine per sink
   *    (SURVEY §3.1, `parallel-workers`). Here a batch's routes are
   *    grouped by target table; groups write concurrently, the routes
@@ -68,14 +72,16 @@ object Pipeline {
     * after[name] cast to the column's Spark type, plus the envelope's
     * op/seq/pos/ts metadata (ts = source event time, which the Kafka
     * sink's envelope re-emits and lake sinks keep as provenance).
-    * The filter sits on the scan; the cast is a narrow projection. */
+    * DDL events are not rows. The filter sits on the scan; the cast is
+    * a narrow projection. */
   def routed(envelope: DataFrame, r: Route): DataFrame = {
     val shape = r.source.getOrElse(r.target)
     val typedCols = shape.columns.map { c =>
       col("after").getItem(c.name).cast(c.sparkType).as(c.name)
     }
     envelope
-      .filter(col("db") === r.db && col("table") === r.table)
+      .filter(col("db") === r.db && col("table") === r.table &&
+        col("op") =!= SchemaEvolution.DdlOp)
       .select(typedCols ++ Seq(col("op"), col("seq"), col("pos"),
         col("ts")): _*)
   }
@@ -88,42 +94,77 @@ object Pipeline {
     else Compactor.lastEventPerKeyAgg(pks, "seq")(batch)
   }
 
+  /** Schema evolution for a pipeline's batches: in-stream DDL updates
+    * `registry`, and `forward` receives each applied statement once per
+    * route whose source it alters, with that route's target — the
+    * shape of [[graft.sinks.JdbcDdlForwarder.forward]]. `false` means
+    * the target dialect cannot express it; the registry is updated
+    * anyway. Evolving routes type through the registry, so they carry
+    * no transforms or column mappers. */
+  final case class Evolution(registry: SchemaRegistry,
+      forward: (DdlStatement, TableDef) => Boolean = (_, _) => true)
+
   /** Assemble and start the streaming query. */
   def start(
       envelope: DataFrame,
       routes: Seq[Route],
       sink: BatchSink,
       checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("3 seconds")): StreamingQuery = {
+      trigger: Trigger = Trigger.ProcessingTime("3 seconds"),
+      evolution: Option[Evolution] = None): StreamingQuery = {
+    require(evolution.isEmpty || routes.forall(_.transforms.isEmpty),
+      "schema evolution does not compose with transforms/column mappers " +
+        "yet — evolving routes project through the registry")
     envelope.writeStream
       .queryName("graft-cdc")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, routes, sink, batchId)
+        processBatch(batch, routes, sink, batchId, evolution)
       }
       .start()
   }
 
   /** One micro-batch: route → transform → compact → sink, per route.
-    * The batch is persisted once so N routes don't rescan the
-    * source. Routes sharing a target form one group and run in order
-    * (two merges into one table would both read its pre-batch state);
-    * distinct targets run concurrently. */
+    * With an [[Evolution]], the batch's DDL is applied and forwarded
+    * first, on the calling thread, so it lands before any DML write.
+    * The batch is persisted when it is read more than once. Routes
+    * sharing a target form one group and run in order (two merges into
+    * one table would both read its pre-batch state); distinct targets
+    * run concurrently. */
   def processBatch(batch: DataFrame, routes: Seq[Route], sink: BatchSink,
-      batchId: Long): Unit = {
-    if (routes.size > 1) batch.persist()
+      batchId: Long, evolution: Option[Evolution] = None): Unit = {
+    val reused = routes.size > 1 || evolution.isDefined
+    if (reused) batch.persist()
     try {
+      evolution.foreach { e =>
+        SchemaEvolution.applyDdl(batch, e.registry, (db, stmt) =>
+          routes.filter(r => r.db == db && r.table == stmt.table).foreach { r =>
+            if (!e.forward(stmt, r.target)) System.err.println(
+              s"[graft] DDL on ${r.target.schema}.${r.target.name} not " +
+                "expressible in the target dialect — registry updated; " +
+                "apply the target ALTER via the per-version restart runbook")
+          })
+      }
       val groups = byTarget(routes)(r => (r.target.schema, r.target.name))
       inParallel(batch.sparkSession, groups.map { group => () =>
         group.foreach { r =>
-          val typed = Transforms.chain(r.transforms: _*)(routed(batch, r))
-          val compact = compacted(typed, r.target)
-          sink.write(compact, r.target, batchId)
+          // an evolving route whose source DDL dropped or renamed
+          // writes nothing
+          val typed = evolution match {
+            case None => Some(r.target -> routed(batch, r))
+            case Some(e) => e.registry.current(r.db, r.table).map(t =>
+              t.copy(schema = r.target.schema, name = r.target.name) ->
+                SchemaEvolution.routedVersioned(batch, r.db, r.table, e.registry))
+          }
+          typed.foreach { case (target, df) =>
+            val compact = compacted(Transforms.chain(r.transforms: _*)(df), target)
+            sink.write(compact, target, batchId)
+          }
         }
       })
     } finally {
-      if (routes.size > 1) batch.unpersist()
+      if (reused) batch.unpersist()
     }
   }
 

@@ -9,18 +9,17 @@ import graft.meta.SchemaRegistry
   * hardest semantic (binlog QueryEvent → parse → versioned registry
   * update; DML pinned to `tableVersion`).
   *
-  * The engine's envelope design makes this cheaper than the
-  * stop/restart protocol the survey anticipated: the STREAMING
-  * schema is the fixed generic envelope (maps), so DDL never changes
-  * the streaming query's schema — it only changes the per-batch
-  * projection built inside `foreachBatch`. Evolution is therefore:
+  * The streaming schema is the fixed generic envelope (maps), so DDL
+  * never changes the streaming query's schema, only the per-batch
+  * projection. [[Pipeline.processBatch]], given a
+  * [[Pipeline.Evolution]], runs the two steps this object owns:
   *
-  *  1. DDL events (`op = "ddl"`, statement in `after["sql"]`) are
-  *     applied to the SchemaRegistry in seq order at the top of each
-  *     batch (driver-side, control-plane);
-  *  2. DML rows project through the schema version they're PINNED to
-  *     (`tableVersion`), per version group, then union-by-name onto
-  *     the latest shape (missing new columns → null) — exactly the
+  *  1. [[applyDdl]]: DDL events (`op = "ddl"`, statement in
+  *     `after["sql"]`) update the SchemaRegistry in seq order at the
+  *     top of the batch (driver-side, control-plane);
+  *  2. [[routedVersioned]]: DML rows project through the schema
+  *     version they're PINNED to (`tableVersion`), then union-by-name
+  *     onto the latest shape (missing new columns → null) — the
   *     reference's version-resolved serialization
   *     (`outputs/kafka/kafka.go:135-140`), generalized.
   */
@@ -33,11 +32,11 @@ object SchemaEvolution {
     * human-scale, the collect is a few rows.
     *
     * `forward` receives each parsed statement (with its source db)
-    * AFTER the registry update — the hook where a route-gated
-    * [[graft.sinks.JdbcDdlForwarder]] emits the target-dialect ALTER
-    * so it lands before this batch's (and every later batch's) DML
-    * writes. A forwarding failure propagates and fails the batch
-    * BEFORE its checkpoint commits — the restart replays the DDL,
+    * AFTER the registry update — the hook where [[Pipeline]] forwards
+    * it to the routes' targets (e.g. through a
+    * [[graft.sinks.JdbcDdlForwarder]]) so it lands before this batch's
+    * (and every later batch's) DML writes. A forwarding failure
+    * propagates and fails the batch BEFORE its checkpoint commits — the restart replays the DDL,
     * where the forwarder's metadata probe makes a landed ALTER a
     * no-op. Note the same at-least-once caveat as the watermark: the
     * registry skip-guard is in-memory, so `forward` implementations
@@ -101,41 +100,5 @@ object SchemaEvolution {
       if (unified.columns.contains(n)) col(n)
       else lit(null).cast(current.column(n).get.sparkType).as(n))
     unified.select(cols ++ meta: _*)
-  }
-
-  /** foreachBatch body with evolution: DDL first (registry update +
-    * optional target forwarding, on the calling thread), then per-table
-    * version-pinned routing → compaction → sink, tables sharing a
-    * target in order and distinct targets concurrently (as
-    * [[Pipeline.processBatch]]). `forward` defaults to a no-op —
-    * pass a route-gated closure (e.g. wrapping
-    * [[graft.sinks.JdbcDdlForwarder]]) to emit target ALTERs before
-    * the DML lands. */
-  def processBatch(batch: DataFrame, registry: SchemaRegistry,
-      tables: Seq[(String, String)], sink: Pipeline.BatchSink,
-      batchId: Long,
-      forward: (String, graft.meta.DdlStatement) => Unit =
-        (_, _) => (),
-      targetNames: Map[(String, String), (String, String)] = Map.empty)
-      : Unit = {
-    batch.persist()
-    try {
-      applyDdl(batch, registry, forward)
-      // the sink names its destination from the TableDef — apply the
-      // route's target-rename so DML lands where the forwarded DDL
-      // went, not under the source's name
-      def targetOf(st: (String, String)) = targetNames.getOrElse(st, st)
-      val groups = Pipeline.byTarget(tables)(targetOf)
-      Pipeline.inParallel(batch.sparkSession, groups.map { group => () =>
-        group.foreach { case (db, table) =>
-          registry.current(db, table).foreach { t =>
-            val typed = routedVersioned(batch, db, table, registry)
-            val (tdb, ttable) = targetOf((db, table))
-            val target = t.copy(schema = tdb, name = ttable)
-            sink.write(Pipeline.compacted(typed, t), target, batchId)
-          }
-        }
-      })
-    } finally batch.unpersist()
   }
 }

@@ -9,6 +9,17 @@ import java.nio.file.{Files, Paths}
 class MainSpec extends SparkSpec {
   import spark.implicits._
 
+  /** `Main.main` in-process: its `getOrCreate` returns the shared test
+    * session and sets the daemon's SQL conf on it, so every runtime
+    * SQL conf it changed is put back for the later suites. */
+  private def runMain(args: String*): Unit = {
+    val before = spark.conf.getAll
+    try Main.main(args.toArray)
+    finally spark.conf.getAll.collect {
+      case (k, v) if !before.get(k).contains(v) && spark.conf.isModifiable(k) => k
+    }.foreach(k => before.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _)))
+  }
+
   test("--config ... --available-now drains the log into the sink") {
     val dir = Files.createTempDirectory("main-e2e")
     val logDir = dir.resolve("log"); Files.createDirectories(logDir)
@@ -52,16 +63,18 @@ class MainSpec extends SparkSpec {
          |source-table = "items"
          |""".stripMargin.getBytes("UTF-8"))
 
-    Main.main(Array(
+    runMain(
       "--config", toml.toString,
       "--checkpoint", ckpt,
       "--metrics-port", "0",
-      "--available-now"))
+      "--available-now")
 
     val state = spark.read.parquet(s"$sinkDir/shop.items")
       .select($"id", $"v").as[(Long, Int)].collect().sortBy(_._1)
     assert(state.toSeq == Seq((1L, 11)),
       "update wins for id 1, delete removes id 2")
+    // the daemon's 32 shuffle partitions did not outlive the call
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
   }
 
   test("binlog input: binary segments drive the same config-only path") {
@@ -112,11 +125,11 @@ class MainSpec extends SparkSpec {
          |source-table = "items"
          |""".stripMargin.getBytes("UTF-8"))
 
-    Main.main(Array(
+    runMain(
       "--config", toml.toString,
       "--checkpoint", ckpt,
       "--metrics-port", "0",
-      "--available-now"))
+      "--available-now")
 
     val state = spark.read.parquet(s"$sinkDir/shop.items")
       .select($"id", $"v").as[(Long, Int)].collect().sortBy(_._1)
@@ -181,11 +194,11 @@ class MainSpec extends SparkSpec {
          |target-table = "items"
          |""".stripMargin.getBytes("UTF-8"))
 
-    Main.main(Array(
+    runMain(
       "--config", toml.toString,
       "--checkpoint", ckpt,
       "--metrics-port", "0",
-      "--available-now"))
+      "--available-now")
 
     // the parquet state evolved: the post-DDL row carries `note`,
     // the pre-DDL row null-fills it

@@ -28,8 +28,9 @@ class SessionSpec extends SparkSpec {
       assert(test.conf.get(k) == expected(k), k)
     }
     // shuffle partitions = cores; the test session pins its own 4 to
-    // match local[4], and in-process mains (MainSpec) reset it at runtime
+    // match local[4] (MainSpec restores it after its in-process mains)
     assert(built.conf.get("spark.sql.shuffle.partitions") == Session.cores.toString)
+    assert(test.conf.get("spark.sql.shuffle.partitions") == "4")
     // the extension is live on the built session without the
     // imperative GraftExtensions.ensure a query would run
     assert(built.catalog.functionExists("dot_product"))

@@ -129,6 +129,38 @@ class PipelineConfigSpec extends SparkSpec {
     assert(row == (7L, 70, "pp"))
   }
 
+  private def renameRouter(mapper: String): String =
+    s"""[[routers]]
+       |source-schema = "shop"
+       |source-table = "items"
+       |target-schema = "tgt"
+       |target-table = "items2"
+       |$mapper
+       |""".stripMargin
+
+  test("rename-only router with an unregistered target lands the source's " +
+      "columns under the target's name") {
+    val registry = new SchemaRegistry
+    registry.applySql(
+      "CREATE TABLE shop.items (id BIGINT PRIMARY KEY, v INT)", "shop")
+    val Seq(route) = PipelineConfig.fromToml(renameRouter("")).routes(registry)
+    assert((route.db, route.table) == ("shop", "items"))
+    assert((route.target.schema, route.target.name) == ("tgt", "items2"))
+    assert(route.target.columns == registry.current("shop", "items").get.columns)
+    assert(route.transforms.isEmpty)
+  }
+
+  test("router with a column mapper and an unregistered target fails loudly") {
+    val registry = new SchemaRegistry
+    registry.applySql(
+      "CREATE TABLE shop.items (id BIGINT PRIMARY KEY, v INT)", "shop")
+    val cfg = PipelineConfig.fromToml(renameRouter(
+      """source-columns = ["id", "v"]
+        |target-columns = ["id", "w"]""".stripMargin))
+    val e = intercept[IllegalArgumentException](cfg.routes(registry))
+    assert(e.getMessage.contains("no schema registered for tgt.items2"))
+  }
+
   test("envelopeColumnMapper keeps the full routed() metadata (op/seq/pos/ts)") {
     val df = Seq((1L, 2L, "insert", 3L, "g",
         java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))

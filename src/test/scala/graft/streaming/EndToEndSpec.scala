@@ -67,4 +67,28 @@ class EndToEndSpec extends SparkSpec {
     assert(state2.toSeq ==
       Seq((1L, 11, "a2"), (2L, 22, "b2"), (3L, 31, "c2")))
   }
+
+  test("static routes drop in-stream DDL events instead of landing them as rows") {
+    val logDir = Files.createTempDirectory("e2e-ddl-log").toString
+    val sinkDir = Files.createTempDirectory("e2e-ddl-sink").toString
+    val ckpt = Files.createTempDirectory("e2e-ddl-ckpt").toString
+    Files.write(Paths.get(logDir, "shard0.jsonl"), Seq(
+      line(0, "insert", 1, 10, "a"),
+      """{"db":"db1","table":"t1","op":"ddl","ts":1700000000001,""" +
+        """"pos":"gtid:1","seq":1,"tableVersion":0,""" +
+        """"after":{"sql":"ALTER TABLE t1 ADD COLUMN d INT"},"before":null}""",
+      line(2, "insert", 2, 20, "b")
+    ).mkString("\n").getBytes("UTF-8"))
+
+    val q = Pipeline.start(
+      spark.readStream.format("graft-changelog").option("path", logDir).load(),
+      Seq(Pipeline.Route("db1", "t1", target)), new ParquetUpsertSink(sinkDir),
+      ckpt, trigger = Trigger.AvailableNow())
+    q.awaitTermination(120000)
+    assert(q.exception.isEmpty, q.exception)
+
+    val state = spark.read.parquet(s"$sinkDir/db1.t1")
+      .select($"id", $"op").as[(Option[Long], String)].collect().sortBy(_._1)
+    assert(state.toSeq == Seq((Some(1L), "insert"), (Some(2L), "insert")))
+  }
 }

@@ -72,6 +72,7 @@ class EvolutionRestartSoakSpec extends SparkSpec {
       preLines(10000, 20000).getBytes("UTF-8"))
 
     val sink = new ParquetUpsertSink(sinkDir)
+    val routes = Seq(Pipeline.Route("db1", "t1", registry.current("db1", "t1").get))
     var seen = 0L
     def drain(): Unit = {
       val q = spark.readStream.format("graft-changelog")
@@ -79,8 +80,8 @@ class EvolutionRestartSoakSpec extends SparkSpec {
         .writeStream.option("checkpointLocation", ckpt)
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
           seen += b.count()
-          SchemaEvolution.processBatch(b, registry, Seq("db1" -> "t1"),
-            sink, id)
+          Pipeline.processBatch(b, routes, sink, id,
+            Some(Pipeline.Evolution(registry)))
         }
         .trigger(Trigger.AvailableNow()).start()
       assert(q.awaitTermination(300000), "drain timed out")

@@ -14,7 +14,7 @@ import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 
 import graft.SparkSpec
 import graft.cdc.ChangeEvent
-import graft.meta.{ColumnDef, TableDef}
+import graft.meta.{ColumnDef, DdlParser, DdlStatement, SchemaRegistry, TableDef}
 import graft.operators.Transforms
 import graft.sinks.ParquetUpsertSink
 
@@ -262,6 +262,78 @@ class PipelineSpec extends SparkSpec {
         assert(w.activeIsBatchSession, w)
         assert(w.executionId == null, w)
       }
+    }
+  }
+
+  test("evolution: a route with transforms is refused before a query starts") {
+    val registry = new SchemaRegistry
+    registry.register(target)
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[ChangeEvent]
+    val ckpt = Files.createTempDirectory("graft-evo-refused-ckpt")
+    val route = Pipeline.Route("db1", "t1", target,
+      transforms = Seq(Transforms.dropWhere(col("op") === "replace")))
+    val before = spark.streams.active.map(_.id).toSet
+    intercept[IllegalArgumentException] {
+      Pipeline.start(mem.toDF(), Seq(route), new ParquetUpsertSink(
+        Files.createTempDirectory("graft-evo-refused").toString),
+        ckpt.toString, trigger = Trigger.AvailableNow(),
+        evolution = Some(Pipeline.Evolution(registry)))
+    }
+    assert(spark.streams.active.map(_.id).toSet == before)
+    assert(Files.list(ckpt).count() == 0)
+  }
+
+  private def evo(seq: Long, table: String, op: String, ver: Int,
+      after: (String, String)*): ChangeEvent =
+    ChangeEvent("db1", table, op, new Timestamp(1700000000000L + seq),
+      s"gtid:$seq", seq, ver, after.toMap, null)
+
+  test("evolution: one batch forwards a table's DDL to its own route's target " +
+      "only, and both renamed targets equal the oracle in the evolved shape") {
+    val registry = new SchemaRegistry
+    registry.applySql("CREATE TABLE a (id BIGINT PRIMARY KEY, k INT)", "db1")
+    registry.applySql("CREATE TABLE b (id BIGINT PRIMARY KEY, k INT)", "db1")
+    val routes = Seq("a", "b").map(t => Pipeline.Route("db1", t,
+      registry.current("db1", t).get.copy(schema = "tgt", name = t + "2")))
+    val alter = "ALTER TABLE a ADD COLUMN note VARCHAR(10)"
+    val log = Seq(
+      evo(0, "a", "insert", 0, "id" -> "1", "k" -> "10"),
+      evo(1, "a", "insert", 0, "id" -> "2", "k" -> "20"),
+      evo(2, "b", "insert", 0, "id" -> "1", "k" -> "100"),
+      evo(3, "a", "ddl", 0, "sql" -> alter),
+      evo(4, "a", "update", 1, "id" -> "1", "k" -> "11", "note" -> "x"),
+      evo(5, "b", "update", 0, "id" -> "1", "k" -> "101"),
+      evo(6, "a", "insert", 1, "id" -> "3", "k" -> "30", "note" -> "y"),
+      evo(7, "a", "delete", 1, "id" -> "2", "k" -> "20"),
+      evo(8, "b", "insert", 0, "id" -> "2", "k" -> "200"),
+      // a v0 straggler after the DDL: decodes through v0, note null
+      evo(9, "a", "insert", 0, "id" -> "4", "k" -> "40"))
+    val forwarded = new ConcurrentLinkedQueue[(DdlStatement, String)]
+    val evolution = Pipeline.Evolution(registry, (stmt, t) => {
+      forwarded.add((stmt, s"${t.schema}.${t.name}")); true
+    })
+    val dir = Files.createTempDirectory("graft-evo-routes").toString
+    Pipeline.processBatch(log.toDF(), routes, new ParquetUpsertSink(dir), 0L,
+      Some(evolution))
+
+    assert(forwarded.asScala.toSeq ==
+      DdlParser.parse(alter, "db1").get._2.map(_ -> "tgt.a2"))
+    /** Last state per key, every event applied in `seq` order. */
+    def oracle(table: String, cols: Seq[String]): Seq[Seq[Option[String]]] =
+      log.filter(e => e.table == table && e.op != "ddl").sortBy(_.seq)
+        .foldLeft(Map.empty[Long, Seq[Option[String]]]) { (m, e) =>
+          val id = e.after("id").toLong
+          if (e.op == "delete") m - id else m + (id -> cols.map(e.after.get))
+        }.toSeq.sortBy(_._1).map(_._2)
+    Seq("a" -> Seq("id", "k", "note"), "b" -> Seq("id", "k")).foreach {
+      case (t, cols) =>
+        val out = spark.read.parquet(s"$dir/tgt.${t}2")
+        assert(out.columns.toSeq.take(cols.size) == cols, t)
+        val got = out.select(cols.map(c => col(c).cast("string")): _*).collect()
+          .map(r => r.toSeq.map(v => Option(v).map(_.toString))).toSeq
+          .sortBy(_.head.get.toLong)
+        assert(got == oracle(t, cols), t)
     }
   }
 }

@@ -22,6 +22,9 @@ class SchemaEvolutionSpec extends SparkSpec {
     s"""{"db":"db1","table":"t1","op":"ddl","ts":${1700000000000L + seq},""" +
       s""""pos":"g:$seq","seq":$seq,"tableVersion":0,"after":{"sql":"$sql"},"before":null}"""
 
+  private def routeT1(registry: SchemaRegistry): Seq[Pipeline.Route] =
+    Seq(Pipeline.Route("db1", "t1", registry.current("db1", "t1").get))
+
   test("DDL in-stream: add column mid-batch, version-pinned decode") {
     val registry = new SchemaRegistry
     registry.applySql("CREATE TABLE t1 (id BIGINT PRIMARY KEY, k INT)", "db1")
@@ -43,7 +46,8 @@ class SchemaEvolutionSpec extends SparkSpec {
       .option("path", logDir).load()
       .writeStream.option("checkpointLocation", ckpt)
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        SchemaEvolution.processBatch(b, registry, Seq("db1" -> "t1"), sink, id)
+        Pipeline.processBatch(b, routeT1(registry), sink, id,
+          Some(Pipeline.Evolution(registry)))
       }
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(120000)
@@ -76,7 +80,8 @@ class SchemaEvolutionSpec extends SparkSpec {
       .option("path", logDir).load()
       .writeStream.option("checkpointLocation", ckpt)
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        SchemaEvolution.processBatch(b, registry, Seq("db1" -> "t1"), sink, id)
+        Pipeline.processBatch(b, routeT1(registry), sink, id,
+          Some(Pipeline.Evolution(registry)))
       }
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(120000)
@@ -122,11 +127,13 @@ class SchemaEvolutionSpec extends SparkSpec {
     val fwd = new JdbcDdlForwarder(() => connect(), DdlForward.Derby)
     val fallbacks = scala.collection.mutable.ArrayBuffer
       .empty[graft.meta.DdlStatement]
-    // gate per route: only db1.t1 forwards, to target table "t1"
-    val forward: (String, graft.meta.DdlStatement) => Unit = {
-      case ("db1", stmt) if stmt.table == "t1" =>
-        if (!fwd.forward(stmt, TableDef("", "t1", Nil))) fallbacks += stmt
-      case _ => ()
+    // one route: only db1.t1 forwards, to the unqualified target "t1"
+    // (an evolving route takes its columns from the registry)
+    val routes = Seq(Pipeline.Route("db1", "t1", TableDef("", "t1", Nil)))
+    val forward: (graft.meta.DdlStatement, TableDef) => Boolean = { (stmt, t) =>
+      val landed = fwd.forward(stmt, t)
+      if (!landed) fallbacks += stmt
+      landed
     }
     // plain-INSERT Derby sink (the upsert dialect is MySQL's; the
     // point here is the DDL ordering, and all test ops are inserts)
@@ -158,8 +165,8 @@ class SchemaEvolutionSpec extends SparkSpec {
       .option("path", logDir).load()
       .writeStream.option("checkpointLocation", ckpt)
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        SchemaEvolution.processBatch(b, registry, Seq("db1" -> "t1"),
-          derbySink, id, forward)
+        Pipeline.processBatch(b, routes, derbySink, id,
+          Some(Pipeline.Evolution(registry, forward)))
       }
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(120000)
