@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructType}
 
+import graft.sinks.Swap
+
 /** Persisted ledger of [[TableChecksum.incrementalChecksums]] deltas
   * — the pipeline-side half of continuous verification: each
   * micro-batch's signed per-chunk deltas land as a `__batch` ledger
@@ -27,11 +29,6 @@ object ChecksumLedger {
     StructField("d_rows", LongType),
     StructField("d_sum", DecimalType(38, 0)),
     StructField("__batch", LongType)))
-
-  private def fs(spark: SparkSession, dir: String) = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-  }
 
   /** Name of the watermark file carrying the highest batch id folded
     * by [[compact]]. */
@@ -57,8 +54,8 @@ object ChecksumLedger {
     * not replay-idempotent on their own). */
   def record(spark: SparkSession, deltas: DataFrame, stateDir: String,
       batchId: Long): Unit = {
-    val (hfs0, p0) = fs(spark, stateDir)
-    if (hfs0.exists(p0) && batchId <= compactedThrough(hfs0, p0)) return
+    val (hfs, p) = Swap.open(spark, stateDir)
+    if (hfs.exists(p) && batchId <= compactedThrough(hfs, p)) return
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try deltas
@@ -82,7 +79,7 @@ object ChecksumLedger {
     * sum (every row inserted was deleted) are dropped — a fresh
     * checksum of the target has no row for an empty chunk either. */
   def current(spark: SparkSession, stateDir: String): DataFrame = {
-    val (hfs, p) = fs(spark, stateDir)
+    val (hfs, p) = Swap.open(spark, stateDir)
     val ledger =
       if (hfs.exists(p)) spark.read.schema(schema).parquet(stateDir)
       else spark.createDataFrame(
@@ -125,23 +122,20 @@ object ChecksumLedger {
       }
       .start()
 
-  /** Collapse the ledger to one row per chunk (crash-safe staging
-    * swap, the compactIndex pattern): keeps [[current]]'s input at
-    * #chunks rows however many batches have run. The compacted rows
-    * land under one reserved partition; later batches append their
-    * own partitions beside it. Run OFFLINE — with the maintenance
-    * query stopped — like the dedup-index compaction: the directory
-    * swap would race an in-flight [[record]]. The watermark it
-    * leaves behind is what keeps REPLAYS safe after the restart; the
-    * offline requirement is only about concurrent writes. */
+  /** Collapse the ledger to one row per chunk (replaced through
+    * [[Swap]]; every entry point recovers a torn swap first, as a torn
+    * swap read as an empty ledger would lose its history): keeps
+    * [[current]]'s input at #chunks rows however many batches have
+    * run. The compacted rows land under one reserved partition; later
+    * batches append their own partitions beside it. Run OFFLINE —
+    * with the maintenance query stopped — like the dedup-index
+    * compaction: the directory swap would race an in-flight
+    * [[record]]. The watermark it leaves behind is what keeps REPLAYS
+    * safe after the restart; the offline requirement is only about
+    * concurrent writes. */
   def compact(spark: SparkSession, stateDir: String): Unit = {
-    val (hfs, p) = fs(spark, stateDir)
-    val old = new org.apache.hadoop.fs.Path(stateDir + ".old")
-    val staging = new org.apache.hadoop.fs.Path(stateDir + ".compacting")
-    if (!hfs.exists(p) && hfs.exists(old))
-      require(hfs.rename(old, p), s"failed to recover $stateDir from .old")
+    val (hfs, p) = Swap.open(spark, stateDir)
     if (!hfs.exists(p)) return
-    if (hfs.exists(staging)) hfs.delete(staging, true)
     val ledger = spark.read.schema(schema).parquet(stateDir)
     if (ledger.isEmpty) return
     // the watermark must cover every batch being folded, and fold
@@ -149,24 +143,20 @@ object ChecksumLedger {
     val maxBatch = math.max(
       ledger.agg(max(col("__batch"))).head.getLong(0),
       compactedThrough(hfs, p))
-    ledger
-      .groupBy(col("chunk"))
-      .agg(sum(col("d_rows")).as("d_rows"),
-        sum(col("d_sum")).cast(DecimalType(38, 0)).as("d_sum"))
-      .filter(col("d_rows") =!= 0 || col("d_sum") =!= 0)
-      // reserved partition id: a real batch never writes -1 (Spark
-      // batch ids start at 0), so compaction output can coexist with
-      // post-compaction batch partitions
-      .withColumn("__batch", lit(-1L))
-      .write.partitionBy("__batch").parquet(staging.toString)
-    val marker = new org.apache.hadoop.fs.Path(staging, CompactedThrough)
-    val out = hfs.create(marker, true)
-    try out.write(maxBatch.toString.getBytes("UTF-8")) finally out.close()
-    if (hfs.exists(old)) hfs.delete(old, true)
-    require(hfs.rename(p, old), s"compact: could not stage out $stateDir")
-    require(hfs.rename(staging, p),
-      s"compact: could not swap in compacted ledger at $stateDir — " +
-        s"live data is at $old")
-    hfs.delete(old, true)
+    Swap(hfs, p) { staged =>
+      ledger
+        .groupBy(col("chunk"))
+        .agg(sum(col("d_rows")).as("d_rows"),
+          sum(col("d_sum")).cast(DecimalType(38, 0)).as("d_sum"))
+        .filter(col("d_rows") =!= 0 || col("d_sum") =!= 0)
+        // reserved partition id: a real batch never writes -1 (Spark
+        // batch ids start at 0), so compaction output can coexist
+        // with post-compaction batch partitions
+        .withColumn("__batch", lit(-1L))
+        .write.partitionBy("__batch").parquet(staged.toString)
+      val out = hfs.create(
+        new org.apache.hadoop.fs.Path(staged, CompactedThrough), true)
+      try out.write(maxBatch.toString.getBytes("UTF-8")) finally out.close()
+    }
   }
 }

@@ -1227,7 +1227,9 @@ object Curation {
               spark.read.parquet(p)
                 .select(col(embId2).as("__qid"), col(embCol2).as("__qv"))
             case None =>
-              spark.read.parquet(s"$indexDir/vectors")
+              val (_, vectors) =
+                graft.sinks.Swap.open(spark, s"$indexDir/vectors")
+              spark.read.parquet(vectors.toString)
                 .filter(col("id").isin(qids: _*))
                 .select(col("id").as("__qid"), col("vec").as("__qv"))
           }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sinks.Swap
+
 import Similarity.{dot, norm}
 
 /** Incremental (persisted) IVF index — the ANN counterpart of
@@ -61,11 +63,6 @@ import Similarity.{dot, norm}
   */
 object IncrementalAnn {
 
-  private def fs(spark: SparkSession, dir: String) = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-  }
-
   /** Unconditional marker (over)write — [[create]] is the declared
     * retrain/retune action, so a DIFFERENT nCells on an existing
     * index is legitimate there (it rewrites centroids and vectors
@@ -74,34 +71,24 @@ object IncrementalAnn {
     * (appendBatch/searchTopK/staleness/compact). */
   private def writeCellMarker(spark: SparkSession, dir: String,
       nCells: Int): Unit = {
-    val (hfs, p) = fs(spark, dir)
+    val (hfs, p) = Swap.fs(spark, dir)
     val marker = new org.apache.hadoop.fs.Path(p, "_graft_cells")
     hfs.mkdirs(p)
     val out = hfs.create(marker, true)
     try out.write(nCells.toString.getBytes("UTF-8")) finally out.close()
   }
 
+  /** Every consumer opens the index here: a torn [[compact]] swap is
+    * recovered ([[Swap.open]]) on ANY open, not only the next
+    * compact(), so it never surfaces as a missing-dir read error. */
   private def readCells(spark: SparkSession, dir: String): Int = {
-    recoverInterruptedSwap(spark, dir)
-    val (hfs, p) = fs(spark, dir)
+    Swap.open(spark, s"$dir/vectors")
+    val (hfs, p) = Swap.fs(spark, dir)
     val marker = new org.apache.hadoop.fs.Path(p, "_graft_cells")
     require(hfs.exists(marker), s"no IVF index at $dir (missing _graft_cells)")
     val in = hfs.open(marker)
     try scala.io.Source.fromInputStream(in).mkString.trim.toInt
     finally in.close()
-  }
-
-  /** Self-heal an interrupted [[compact]] swap (crash between the two
-    * renames leaves `vectors.old` but no `vectors/`) on ANY index
-    * open, not only the next compact() — every consumer goes through
-    * [[readCells]], so a torn swap never surfaces as a missing-dir
-    * read error that waits for an operator to re-run compact. */
-  private def recoverInterruptedSwap(spark: SparkSession,
-      dir: String): Unit = {
-    val (hfs, p) = fs(spark, s"$dir/vectors")
-    val old = new org.apache.hadoop.fs.Path(s"$dir/vectors.old")
-    if (!hfs.exists(p) && hfs.exists(old))
-      require(hfs.rename(old, p), s"failed to recover $dir/vectors from .old")
   }
 
   /** Train centroids on `corpus` (Lloyd rounds over deterministic
@@ -117,7 +104,8 @@ object IncrementalAnn {
   def create(spark: SparkSession, corpus: DataFrame, vecCol: String,
       idCol: String, dir: String, nCells: Int = 16,
       rounds: Int = 1): Unit = {
-    val (hfs, p) = fs(spark, dir)
+    Swap.open(spark, s"$dir/vectors")
+    val (hfs, p) = Swap.fs(spark, dir)
     val marker = new org.apache.hadoop.fs.Path(p, "_graft_cells")
     if (hfs.exists(marker)) hfs.delete(marker, false)
     val cents = Similarity.kmeansRefine(corpus, vecCol, idCol,
@@ -189,33 +177,18 @@ object IncrementalAnn {
     * replays from the last committed GTID and relies on sink
     * idempotence; here the index IS the sink).
     *
-    * Crash-safe staging swap, same discipline as
-    * [[IncrementalDedup.compactIndex]]: write `.compacting`, move
-    * live → `.old`, move staging → live, drop `.old`; an interrupted
-    * swap is recovered (live restored from `.old`) before any new
-    * work. */
+    * The rewrite replaces `vectors/` through [[Swap]]; every open
+    * of the index recovers a torn swap first. */
   def compact(spark: SparkSession, dir: String): Unit = {
-    val vecDir = s"$dir/vectors"
-    val (hfs, p) = fs(spark, vecDir)
-    val old = new org.apache.hadoop.fs.Path(vecDir + ".old")
-    val staging = new org.apache.hadoop.fs.Path(vecDir + ".compacting")
-    if (!hfs.exists(p) && hfs.exists(old))
-      require(hfs.rename(old, p), s"failed to recover $vecDir from .old")
-    if (!hfs.exists(p)) return
+    val (hfs, vec) = Swap.open(spark, s"$dir/vectors")
+    if (!hfs.exists(vec)) return
     readCells(spark, dir) // fail loudly on a half-built index
-    if (hfs.exists(staging)) hfs.delete(staging, true)
-    val vectors = spark.read.parquet(vecDir)
-    vectors.groupBy(col("cell"), col("id"))
+    Swap(hfs, vec)(staged => spark.read.parquet(vec.toString)
+      .groupBy(col("cell"), col("id"))
       .agg(min(struct(col("vec"), col("nrm"))).as("v"))
       .select(col("id"), col("v.vec").as("vec"),
         col("v.nrm").as("nrm"), col("cell"))
-      .write.partitionBy("cell").parquet(staging.toString)
-    if (hfs.exists(old)) hfs.delete(old, true)
-    require(hfs.rename(p, old), s"compact: could not stage out $vecDir")
-    require(hfs.rename(staging, p),
-      s"compact: could not swap in compacted vectors at $vecDir — " +
-        s"live data is at $old")
-    hfs.delete(old, true)
+      .write.partitionBy("cell").parquet(staged.toString))
   }
 
   /** Serve top-k from the index files: rank the broadcast centroids

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.functions.TextFunctions.fingerprint
+import graft.sinks.Swap
 
 /** Incremental (historical) exact dedup — the continuous-ingestion
   * shape: each arriving batch is checked against a PERSISTED
@@ -35,10 +36,9 @@ import graft.functions.TextFunctions.fingerprint
   *
   * Replay safety: accepting a batch twice appends duplicate index
   * rows — harmless for membership (anti-join semantics) and bounded
-  * by the replay count; [[graft.sinks.LakeLayout.compact]]-style
-  * rewrites can dedupe the index offline. The novel-doc OUTPUT is
-  * replay-stable: a replayed batch returns zero novel docs because
-  * its fingerprints are already indexed.
+  * by the replay count; [[compactIndex]] dedupes the index offline.
+  * The novel-doc OUTPUT is replay-stable: a replayed batch returns
+  * zero novel docs because its fingerprints are already indexed.
   */
 object IncrementalDedup {
 
@@ -47,14 +47,9 @@ object IncrementalDedup {
     StructField("keep_id", LongType),
     StructField("bucket", LongType)))
 
-  private def fs(spark: SparkSession, dir: String) = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-  }
-
   private def checkOrWriteBucketMarker(spark: SparkSession, dir: String,
       nBuckets: Int): Unit = {
-    val (hfs, p) = fs(spark, dir)
+    val (hfs, p) = Swap.fs(spark, dir)
     val marker = new org.apache.hadoop.fs.Path(p, "_graft_buckets")
     if (hfs.exists(marker)) {
       val in = hfs.open(marker)
@@ -82,7 +77,7 @@ object IncrementalDedup {
     * error. */
   def checkOrWriteIdentityMarker(spark: SparkSession, dir: String,
       name: String, content: String): Unit = {
-    val (hfs, p) = fs(spark, dir)
+    val (hfs, p) = Swap.open(spark, dir)
     val marker = new org.apache.hadoop.fs.Path(p, name)
     if (hfs.exists(marker)) {
       val in = hfs.open(marker)
@@ -115,7 +110,7 @@ object IncrementalDedup {
   def novel(spark: SparkSession, batch: DataFrame, textCol: String,
       idCol: String, indexDir: String, nBuckets: Int = 64,
       materialize: Boolean = true): DataFrame = {
-    val (hfs, p) = fs(spark, indexDir)
+    val (hfs, p) = Swap.open(spark, indexDir)
     if (hfs.exists(p)) checkOrWriteBucketMarker(spark, indexDir, nBuckets)
     val fps = batch
       .withColumn("fp", fingerprint(coalesce(col(textCol), lit(""))))
@@ -157,6 +152,7 @@ object IncrementalDedup {
     * can defer the index mutation past it (≙ [[appendBandRows]]). */
   def appendFpRows(spark: SparkSession, rows: DataFrame,
       indexDir: String, nBuckets: Int = 64): Unit = {
+    Swap.open(spark, indexDir)
     rows.select(col("fp"), col("bucket"), col("keep_id"))
       .write.mode(SaveMode.Append).partitionBy("bucket").parquet(indexDir)
     checkOrWriteBucketMarker(spark, indexDir, nBuckets)
@@ -225,7 +221,7 @@ object IncrementalDedup {
   def novelNearDup(spark: SparkSession, batch: DataFrame, textCol: String,
       idCol: String, indexDir: String,
       nBuckets: Int = 64): (DataFrame, DataFrame) = {
-    val (hfs, p) = fs(spark, indexDir)
+    val (hfs, p) = Swap.open(spark, indexDir)
     if (hfs.exists(p)) checkOrWriteBucketMarker(spark, indexDir, nBuckets)
     // feeds the touched-bucket collect, the index probe, the pair
     // join and the append — one materialization instead of four
@@ -281,6 +277,7 @@ object IncrementalDedup {
     * can defer the index mutation past it. */
   def appendBandRows(spark: SparkSession, appendBands: DataFrame,
       indexDir: String, nBuckets: Int = 64): Unit = {
+    Swap.open(spark, indexDir)
     appendBands.select(col("band"), col("x"), col("y"),
         col("keep_id"), col("bucket"))
       .write.mode(SaveMode.Append).partitionBy("bucket").parquet(indexDir)
@@ -296,20 +293,13 @@ object IncrementalDedup {
     * `_graft_buckets` marker. Works on BOTH layouts (exact-fp and
     * near-dup bands: the key is every column except `keep_id`).
     *
-    * Crash-safe staging swap (the LakeLayout discipline, over the
-    * index's own Hadoop FS): write `.compacting`, move live →
-    * `.old`, move staging → live, drop `.old`; an interrupted swap
-    * is recovered (live restored from `.old`) before any new work.
+    * The rewrite replaces the index through [[Swap]]; every entry
+    * point recovers a torn swap first ([[Swap.open]]) — a torn swap
+    * read as an empty index would re-admit every indexed doc.
     */
   def compactIndex(spark: SparkSession, indexDir: String): Unit = {
-    val (hfs, p) = fs(spark, indexDir)
-    val old = new org.apache.hadoop.fs.Path(indexDir + ".old")
-    val staging = new org.apache.hadoop.fs.Path(indexDir + ".compacting")
-    // recover an interrupted swap: live missing, only copy in .old
-    if (!hfs.exists(p) && hfs.exists(old))
-      require(hfs.rename(old, p), s"failed to recover $indexDir from .old")
+    val (hfs, p) = Swap.open(spark, indexDir)
     if (!hfs.exists(p)) return
-    if (hfs.exists(staging)) hfs.delete(staging, true)
     // an index created by an empty first batch holds only the marker
     // and _SUCCESS — nothing to compact, and schema inference over
     // zero data files would throw (novel() defends the same case
@@ -320,29 +310,24 @@ object IncrementalDedup {
       hasData = it.next().getPath.getName.endsWith(".parquet")
     if (!hasData) return
     val idx = spark.read.parquet(indexDir)
-    import org.apache.spark.sql.functions.{col, min}
     val keyCols = idx.columns.filterNot(_ == "keep_id").toSeq
     require(keyCols.contains("bucket"),
       s"$indexDir does not look like a graft dedup index (no bucket column)")
-    idx.groupBy(keyCols.map(col): _*)
-      .agg(min(col("keep_id")).as("keep_id"))
-      .write.partitionBy("bucket").parquet(staging.toString)
-    // carry the layout markers into the staged copy before the swap
-    // (_graft_buckets; _graft_neartok when the dedup-near stage
-    // stamped a tokenizer identity)
-    for (name <- Seq("_graft_buckets", "_graft_neartok")) {
-      val marker = new org.apache.hadoop.fs.Path(p, name)
-      if (hfs.exists(marker))
-        org.apache.hadoop.fs.FileUtil.copy(hfs, marker, hfs,
-          new org.apache.hadoop.fs.Path(staging, name),
-          false, spark.sessionState.newHadoopConf())
+    Swap(hfs, p) { staged =>
+      idx.groupBy(keyCols.map(col): _*)
+        .agg(min(col("keep_id")).as("keep_id"))
+        .write.partitionBy("bucket").parquet(staged.toString)
+      // carry the layout markers into the staged copy before the swap
+      // (_graft_buckets; _graft_neartok when the dedup-near stage
+      // stamped a tokenizer identity)
+      for (name <- Seq("_graft_buckets", "_graft_neartok")) {
+        val marker = new org.apache.hadoop.fs.Path(p, name)
+        if (hfs.exists(marker))
+          org.apache.hadoop.fs.FileUtil.copy(hfs, marker, hfs,
+            new org.apache.hadoop.fs.Path(staged, name),
+            false, spark.sessionState.newHadoopConf())
+      }
     }
-    if (hfs.exists(old)) hfs.delete(old, true)
-    require(hfs.rename(p, old), s"compactIndex: could not stage out $indexDir")
-    require(hfs.rename(staging, p),
-      s"compactIndex: could not swap in compacted index at $indexDir — " +
-        s"live data is at $old")
-    hfs.delete(old, true)
   }
 
   /** [[novelNearDup]] + append every survivor's band rows to the

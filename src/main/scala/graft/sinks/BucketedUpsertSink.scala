@@ -1,9 +1,6 @@
 package graft.sinks
 
-import java.nio.file.{Files, Paths}
-
-import scala.jdk.CollectionConverters._
-
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
@@ -40,57 +37,51 @@ final class BucketedUpsertSink(rootDir: String, buckets: Int = 64)
 
   override def write(batch: DataFrame, t: TableDef, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val dir = tableDir(t)
+    val (hfs, dir) = Swap.open(spark, tableDir(t))
     val pks = t.pkColumns.map(_.name)
     require(pks.nonEmpty,
       s"${t.schema}.${t.name}: BucketedUpsertSink requires primary keys " +
         "(pk-less tables have no upsert identity — use an append sink)")
-    rejectFlatLayout(dir, t)
-    recoverInterruptedSwap(dir)
+    rejectFlatLayout(recoverBuckets(hfs, dir), dir, t)
     val bucketed = withBucket(batch, t).persist()
     try {
       val touched = bucketed.select(col("bucket")).distinct()
         .collect().map(_.getLong(0)).sorted
       if (touched.isEmpty) return
-      val existingTouched = touched
-        .filter(b => Files.exists(Paths.get(s"$dir/bucket=$b")))
+      def bucketDir(b: Long) = new Path(dir, s"bucket=$b")
+      val existingTouched = touched.filter(b => hfs.exists(bucketDir(b)))
       val merged =
         if (existingTouched.isEmpty) bucketed
         else {
           // partition-pruned read: only the touched buckets
           val existing = spark.read
-            .option("basePath", dir)
-            .parquet(existingTouched.toSeq.map(b => s"$dir/bucket=$b"): _*)
+            .option("basePath", dir.toString)
+            .parquet(existingTouched.toSeq.map(bucketDir(_).toString): _*)
           Compactor.lastEventPerKeyAgg(pks, "seq")(
             existing.unionByName(bucketed, allowMissingColumns = true))
         }
       val finalState = merged.filter(col("op") =!= "delete")
-      // distributed write to a staging dir (never through the
-      // driver), then swap ONLY the touched bucket dirs. A touched
-      // bucket with no surviving rows has no staged dir and its
-      // target dir is removed — deletes can't resurrect.
-      val staging = s"$dir.staging-$batchId"
-      finalState.write.mode(SaveMode.Overwrite)
-        .partitionBy("bucket").parquet(staging)
-      // crash-safe swap: move the old bucket ASIDE (restorable),
-      // move the staged one in, then drop the aside copy. A crash
-      // between steps leaves either the old dir, or the aside copy
-      // that recoverInterruptedSwap restores on replay — pre-batch
-      // state is never destroyed before its replacement is in place.
-      touched.foreach { b =>
-        val src = Paths.get(s"$staging/bucket=$b")
-        val dst = Paths.get(s"$dir/bucket=$b")
-        val aside = Paths.get(s"$dir/.aside-bucket=$b")
-        deleteRecursively(aside)
-        if (Files.exists(dst)) Files.move(dst, aside)
-        if (Files.exists(src)) {
-          Files.createDirectories(dst.getParent)
-          Files.move(src, dst)
-        }
-        deleteRecursively(aside)
+      // distributed write to the table's staging dir (never through
+      // the driver), then a swap of ONLY the touched bucket dirs. A
+      // touched bucket with no surviving rows has no staged dir and
+      // its live dir is removed — deletes can't resurrect.
+      Swap.withStaging(hfs, dir) { staged =>
+        finalState.write.mode(SaveMode.Overwrite)
+          .partitionBy("bucket").parquet(staged.toString)
+        touched.foreach(b =>
+          Swap.commit(hfs, bucketDir(b), new Path(staged, s"bucket=$b")))
       }
-      deleteRecursively(Paths.get(staging))
     } finally bucketed.unpersist()
+  }
+
+  /** Recover any torn bucket swap (its aside copy is a dot-hidden
+    * child of the table dir, invisible to partition discovery);
+    * returns the table dir's listing. */
+  private def recoverBuckets(hfs: FileSystem, dir: Path): Seq[FileStatus] = {
+    if (!hfs.exists(dir)) return Nil
+    val listing = hfs.listStatus(dir).toSeq
+    Swap.recoverChildren(hfs, dir, listing.map(_.getPath))
+    listing
   }
 
   /** A target dir holding top-level parquet files is state from the
@@ -98,58 +89,20 @@ final class BucketedUpsertSink(rootDir: String, buckets: Int = 64)
     * ignore every pre-existing row (this sink only reads bucket=&lt;b&gt;/
     * subdirs) — wrong table state with no error — so fail loudly and
     * name the migration path instead. */
-  private def rejectFlatLayout(dir: String, t: TableDef): Unit = {
-    val p = Paths.get(dir)
-    if (!Files.exists(p)) return
-    val s = Files.list(p)
-    val flat =
-      try s.iterator().asScala.exists { f =>
-        val n = f.getFileName.toString
-        n.endsWith(".parquet") && !Files.isDirectory(f)
-      } finally s.close()
-    if (flat) throw new IllegalStateException(
-      s"${t.schema}.${t.name}: $dir holds non-bucketed (flat ParquetUpsertSink) " +
-        "state, which this sink's bucket=<b>/ reads would silently ignore. " +
-        "Either keep the table on the 'parquet-upsert' sink, or migrate once: " +
-        "read the flat dir and re-write it through BucketedUpsertSink into a " +
-        "fresh directory.")
+  private def rejectFlatLayout(listing: Seq[FileStatus], dir: Path,
+      t: TableDef): Unit =
+    if (listing.exists(f => !f.isDirectory && f.getPath.getName.endsWith(".parquet")))
+      throw new IllegalStateException(
+        s"${t.schema}.${t.name}: $dir holds non-bucketed (flat ParquetUpsertSink) " +
+          "state, which this sink's bucket=<b>/ reads would silently ignore. " +
+          "Either keep the table on the 'parquet-upsert' sink, or migrate once: " +
+          "read the flat dir and re-write it through BucketedUpsertSink into a " +
+          "fresh directory.")
+
+  def read(t: TableDef): DataFrame = {
+    val spark = org.apache.spark.sql.SparkSession.active
+    val (hfs, dir) = Swap.open(spark, tableDir(t))
+    recoverBuckets(hfs, dir)
+    spark.read.parquet(dir.toString).drop("bucket")
   }
-
-  /** Replay recovery: an `.aside-bucket=` dir whose real bucket is
-    * missing means a swap died between move-aside and move-in —
-    * restore it (the batch will be re-merged); otherwise the swap
-    * completed and the aside copy is garbage. Stale staging dirs are
-    * removed wholesale. */
-  private def recoverInterruptedSwap(dir: String): Unit = {
-    val p = Paths.get(dir)
-    if (!Files.exists(p)) return
-    val s = Files.list(p)
-    try s.iterator().asScala.toVector.foreach { f =>
-      val n = f.getFileName.toString
-      if (n.startsWith(".aside-bucket=")) {
-        val real = Paths.get(dir, n.stripPrefix(".aside-"))
-        if (!Files.exists(real)) Files.move(f, real)
-        else deleteRecursively(f)
-      }
-    } finally s.close()
-    val parent = p.getParent
-    val base = p.getFileName.toString
-    val siblings = Files.list(parent)
-    try siblings.iterator().asScala.toVector.foreach { f =>
-      if (f.getFileName.toString.startsWith(s"$base.staging-"))
-        deleteRecursively(f)
-    } finally siblings.close()
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.delete(f))
-      finally s.close()
-    }
-
-  def read(t: TableDef): DataFrame =
-    org.apache.spark.sql.SparkSession.active.read.parquet(tableDir(t))
-      .drop("bucket")
 }

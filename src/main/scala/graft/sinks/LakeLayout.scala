@@ -1,7 +1,5 @@
 package graft.sinks
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,8 +23,8 @@ import org.apache.spark.sql.functions._
   *    OPENS, not bytes, once this goes unmanaged.
   *
   * All operations are distributed writes (no driver materialization);
-  * the swap in [[compact]] reuses the move-aside pattern of
-  * [[BucketedUpsertSink]] so a crash mid-swap is recoverable.
+  * [[compact]] replaces the table through [[Swap]], and [[write]] and
+  * [[compact]] recover a torn swap before touching the table.
   */
 object LakeLayout {
 
@@ -48,6 +46,9 @@ object LakeLayout {
       sortCols: Seq[String], filesPerPartition: Int = 1,
       maxRecordsPerFile: Long = 0L, mode: String = "overwrite"): Unit = {
     require(partCols.nonEmpty, "need at least one partition column")
+    // an append must land beside the pre-swap rows, not start a fresh
+    // table while they sit in the aside copy
+    Swap.open(df.sparkSession, path)
     val keys: Seq[Column] =
       if (filesPerPartition <= 1) partCols.map(col)
       else partCols.map(col) :+
@@ -114,42 +115,14 @@ object LakeLayout {
   /** Compact a partitioned parquet dir written by [[write]] (or by a
     * streaming sink) down to `filesPerPartition` files per partition,
     * preserving the sort clustering. The rewrite is fully
-    * distributed: read → repartition → staged write → directory
-    * swap. The old layout is moved aside before the staged result
-    * moves in, so a crash between the two moves leaves a recoverable
-    * `<path>.old`; nothing is deleted until the swap completed.
+    * distributed: read → repartition → staged write → [[Swap]], so a
+    * crash anywhere leaves a table the next [[write]] or [[compact]]
+    * recovers.
     */
   def compact(spark: SparkSession, path: String, partCols: Seq[String],
       sortCols: Seq[String], filesPerPartition: Int = 1): Unit = {
-    val staging = path + ".compacting"
-    val old = path + ".old"
-    recoverInterruptedSwap(path)
-    val p = Paths.get(path); val s = Paths.get(staging); val o = Paths.get(old)
-    deleteRecursively(s) // stale staging from a failed earlier attempt
-    write(spark.read.parquet(path), staging, partCols, sortCols,
-      filesPerPartition)
-    deleteRecursively(o)
-    Files.move(p, o, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(s, p, StandardCopyOption.ATOMIC_MOVE)
-    deleteRecursively(o)
+    val (hfs, live) = Swap.open(spark, path)
+    Swap(hfs, live)(staged => write(spark.read.parquet(live.toString),
+      staged.toString, partCols, sortCols, filesPerPartition))
   }
-
-  /** Crash between the two moves in [[compact]] leaves the table dir
-    * missing with the only copy in `<path>.old` — restore it before
-    * doing anything else (same recovery discipline as
-    * [[BucketedUpsertSink]]; without it a later overwrite-mode write
-    * would silently recreate the table from one batch while the real
-    * data sits forgotten in `.old`). */
-  private def recoverInterruptedSwap(path: String): Unit = {
-    val p = Paths.get(path); val o = Paths.get(path + ".old")
-    if (!Files.exists(p) && Files.exists(o))
-      Files.move(o, p, StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(Files.deleteIfExists(_))
-    }
 }

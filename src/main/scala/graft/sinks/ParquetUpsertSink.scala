@@ -1,9 +1,6 @@
 package graft.sinks
 
-import java.nio.file.{Files, Paths}
-
-import scala.jdk.CollectionConverters._
-
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
@@ -33,13 +30,12 @@ final class ParquetUpsertSink(rootDir: String) extends BatchSink {
 
   override def write(batch: DataFrame, t: TableDef, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val p = path(t)
-    rejectBucketedLayout(p, t)
-    recoverInterruptedSwap(p)
+    val (hfs, live) = Swap.open(spark, path(t))
+    rejectBucketedLayout(hfs, live, t)
     val pks = t.pkColumns.map(_.name)
     val merged =
-      if (Files.exists(Paths.get(p))) {
-        val existing = spark.read.parquet(p)
+      if (hfs.exists(live)) {
+        val existing = spark.read.parquet(live.toString)
         val unioned = existing.unionByName(batch, allowMissingColumns = true)
         // pk-less tables have no upsert identity: append-only (the
         // compactor's groupBy() over zero keys would collapse the
@@ -48,19 +44,12 @@ final class ParquetUpsertSink(rootDir: String) extends BatchSink {
         else Compactor.lastEventPerKeyAgg(pks, "seq")(unioned)
       } else batch
     val finalState = merged.filter(col("op") =!= "delete")
-    // Distributed write to a staging dir (executors write in
-    // parallel; nothing flows through the driver), then a crash-safe
-    // move-aside swap: the dir still being read is never overwritten
-    // in place, and pre-batch state survives until its replacement
-    // is fully in position (same protocol as BucketedUpsertSink).
-    val staging = Paths.get(s"$p.staging-$batchId")
-    finalState.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    val target = Paths.get(p)
-    val aside = Paths.get(s"$p.aside")
-    deleteRecursively(aside)
-    if (Files.exists(target)) Files.move(target, aside)
-    Files.move(staging, target)
-    deleteRecursively(aside)
+    // Distributed write to the staging dir (executors write in
+    // parallel; nothing flows through the driver), then the swap: the
+    // dir still being read is never overwritten in place, and
+    // pre-batch state survives until its replacement is in position.
+    Swap(hfs, live)(staged =>
+      finalState.write.mode(SaveMode.Overwrite).parquet(staged.toString))
   }
 
   /** A target dir holding bucket=&lt;b&gt;/ subdirs is state from the
@@ -70,52 +59,19 @@ final class ParquetUpsertSink(rootDir: String) extends BatchSink {
     * the table flat — silent layout/schema corruption. Fail loudly
     * instead (the exact mirror of BucketedUpsertSink's
     * rejectFlatLayout guard). */
-  private def rejectBucketedLayout(dir: String, t: TableDef): Unit = {
-    val p = Paths.get(dir)
-    if (!Files.exists(p)) return
-    val s = Files.list(p)
-    val bucketed =
-      try s.iterator().asScala.exists(f =>
-        Files.isDirectory(f) && f.getFileName.toString.startsWith("bucket="))
-      finally s.close()
-    if (bucketed) throw new IllegalStateException(
-      s"${t.schema}.${t.name}: $dir holds bucketed (BucketedUpsertSink) " +
-        "state; merging it flat would inject a spurious 'bucket' column and " +
-        "corrupt the layout. Keep the table on the 'bucketed-upsert' sink, " +
-        "or migrate once: read the bucketed dir (dropping 'bucket') and " +
-        "re-write it through ParquetUpsertSink into a fresh directory.")
+  private def rejectBucketedLayout(hfs: FileSystem, dir: Path,
+      t: TableDef): Unit =
+    if (hfs.exists(dir) && hfs.listStatus(dir).exists(f =>
+        f.isDirectory && f.getPath.getName.startsWith("bucket=")))
+      throw new IllegalStateException(
+        s"${t.schema}.${t.name}: $dir holds bucketed (BucketedUpsertSink) " +
+          "state; merging it flat would inject a spurious 'bucket' column and " +
+          "corrupt the layout. Keep the table on the 'bucketed-upsert' sink, " +
+          "or migrate once: read the bucketed dir (dropping 'bucket') and " +
+          "re-write it through ParquetUpsertSink into a fresh directory.")
+
+  def read(t: TableDef): DataFrame = {
+    val spark = org.apache.spark.sql.SparkSession.active
+    spark.read.parquet(Swap.open(spark, path(t))._2.toString)
   }
-
-  /** Replay recovery: an `.aside` dir whose real table dir is missing
-    * means a swap died between move-aside and move-in — restore it
-    * (the batch re-merges idempotently); stale staging dirs are
-    * dropped. */
-  private def recoverInterruptedSwap(p: String): Unit = {
-    val target = Paths.get(p)
-    val aside = Paths.get(s"$p.aside")
-    if (Files.exists(aside)) {
-      if (!Files.exists(target)) Files.move(aside, target)
-      else deleteRecursively(aside)
-    }
-    val parent = target.toAbsolutePath.getParent
-    if (parent != null && Files.exists(parent)) {
-      val base = target.getFileName.toString
-      val s = Files.list(parent)
-      try s.iterator().asScala.toVector.foreach { f =>
-        if (f.getFileName.toString.startsWith(s"$base.staging-"))
-          deleteRecursively(f)
-      } finally s.close()
-    }
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.delete(f))
-      finally s.close()
-    }
-
-  def read(t: TableDef): DataFrame =
-    org.apache.spark.sql.SparkSession.active.read.parquet(path(t))
 }

@@ -90,9 +90,29 @@ class ChecksumLedgerSpec extends SparkSpec {
     val conf = spark.sessionState.newHadoopConf()
     val p = new org.apache.hadoop.fs.Path(dir)
     val hfs = p.getFileSystem(conf)
-    require(hfs.rename(p, new org.apache.hadoop.fs.Path(dir + ".old")))
+    require(hfs.rename(p, new org.apache.hadoop.fs.Path(p.getParent, ".aside-l")))
     ChecksumLedger.compact(spark, dir)
     assert(cur(dir) == before)
+  }
+
+  test("a torn compaction swap: current keeps its pre-compaction value, " +
+      "and the next record + compact keeps the history") {
+    import graft.sinks.{Swap, SwapFaults}
+    val dir = Files.createTempDirectory("cksum-ledger").toString + "/l"
+    ChecksumLedger.record(spark, deltas(b0), dir, 0L)
+    val before = cur(dir)
+    intercept[SwapFaults.Injected] {
+      SwapFaults.failing(Swap.MoveAside, _ == dir)(
+        ChecksumLedger.compact(spark, dir))
+    }
+    assert(!Files.exists(java.nio.file.Paths.get(dir)), "the fault tore the swap")
+    assert(cur(dir) == before)
+    ChecksumLedger.record(spark, deltas(b1), dir, 1L)
+    ChecksumLedger.compact(spark, dir)
+    val clean = Files.createTempDirectory("cksum-ledger").toString + "/l"
+    ChecksumLedger.record(spark, deltas(b0), clean, 0L)
+    ChecksumLedger.record(spark, deltas(b1), clean, 1L)
+    assert(cur(dir) == cur(clean))
   }
 
   test("current on an absent ledger is empty; fully-cancelled chunks drop") {

@@ -196,6 +196,32 @@ class IncrementalAnnSpec extends SparkSpec {
     assert(n == 24 + 8, s"expected 32 unique rows, got $n")
   }
 
+  test("a torn compact swap recovers on the next open: search returns " +
+      "the pre-compaction answer") {
+    import graft.sinks.{Swap, SwapFaults}
+    val dir = newDir()
+    val c = corpus()
+    IncrementalAnn.create(spark, c, "embedding", "vec_id", dir, nCells = 4)
+    val batch = corpus(n = 8, offset = 100L)
+    IncrementalAnn.appendBatch(spark, batch, "embedding", "vec_id", dir)
+    IncrementalAnn.appendBatch(spark, batch, "embedding", "vec_id", dir)
+    def results() = IncrementalAnn
+      .searchTopK(spark, c.filter($"vec_id" < 4), "embedding", "vec_id",
+        dir, k = 5, nProbe = 2)
+      .select($"qid", $"rank", $"nid").as[(Long, Int, Long)]
+      .collect().toSet
+    val before = results()
+    intercept[SwapFaults.Injected] {
+      SwapFaults.failing(Swap.MoveAside, _ == s"$dir/vectors")(
+        IncrementalAnn.compact(spark, dir))
+    }
+    assert(!new java.io.File(s"$dir/vectors").exists(), "the fault tore the swap")
+    assert(results() == before)
+    assert(!new java.io.File(s"$dir/.aside-vectors").exists())
+    IncrementalAnn.compact(spark, dir)
+    assert(spark.read.parquet(s"$dir/vectors").count() == 24 + 8)
+  }
+
   test("the CLI maintenance entry dispatches on the layout marker: " +
       "ann vs dedup index, one command") {
     // ANN layout → IncrementalAnn.compact

@@ -167,6 +167,37 @@ class IncrementalDedupSpec extends SparkSpec {
       s"cross-micro-batch near-dups must drop: $accepted")
   }
 
+  test("a torn compactIndex swap: a replayed indexed batch gives 0 novel " +
+      "docs, also after the next append and compaction") {
+    import graft.sinks.{Swap, SwapFaults}
+    val idx = Files.createTempDirectory("inc-torn").toString + "/index"
+    def tearCompaction(): Unit = {
+      intercept[SwapFaults.Injected] {
+        SwapFaults.failing(Swap.MoveAside, _ == idx)(
+          IncrementalDedup.compactIndex(spark, idx))
+      }
+      assert(!Files.exists(java.nio.file.Paths.get(idx)), "the fault tore the swap")
+    }
+    def novel(df: org.apache.spark.sql.DataFrame) =
+      IncrementalDedup.novel(spark, df, "text", "doc_id", idx).count()
+    val b1 = Seq((1L, "alpha text"), (2L, "beta text")).toDF("doc_id", "text")
+    assert(IncrementalDedup.acceptNovel(spark, b1, "text", "doc_id", idx)
+      .count() == 2)
+    tearCompaction()
+    assert(novel(b1) == 0)
+    val b2 = Seq((3L, "gamma text")).toDF("doc_id", "text")
+    assert(IncrementalDedup.acceptNovel(spark, b2, "text", "doc_id", idx)
+      .count() == 1)
+    IncrementalDedup.compactIndex(spark, idx)
+    assert(novel(b1) == 0 && novel(b2) == 0)
+    // stamping a layout identity is an open too
+    tearCompaction()
+    IncrementalDedup.checkOrWriteIdentityMarker(spark, idx, "_graft_neartok",
+      "tokenizer=word")
+    assert(novel(b1) == 0 && novel(b2) == 0)
+    assert(!Files.exists(java.nio.file.Paths.get(idx).resolveSibling(".aside-index")))
+  }
+
   test("compactIndex collapses replay duplicates, keeps membership and pruning") {
     val idx = Files.createTempDirectory("inc-compact").toString + "/index"
     val b1 = Seq((1L, near1), (2L, other)).toDF("doc_id", "text")

@@ -79,6 +79,35 @@ class BucketedUpsertSinkSpec extends SparkSpec {
       "pre-crash state must survive an interrupted swap")
   }
 
+  test("a fault after a bucket's move-aside, then the replayed write, " +
+      "equals a one-shot write") {
+    val b0 = batch((1L, 10, "insert", 1), (2L, 20, "insert", 2),
+      (3L, 30, "insert", 3))
+    val b1 = batch((2L, 21, "update", 4), (3L, 0, "delete", 5),
+      (4L, 40, "insert", 6))
+    def state(sink: BucketedUpsertSink) = sink.read(target)
+      .select($"id", $"v").as[(Long, Int)].collect().sortBy(_._1).toSeq
+    val dir = Files.createTempDirectory("bucket-sink-torn").toString
+    val sink = new BucketedUpsertSink(dir, buckets = 4)
+    sink.write(b0, target, 0)
+    intercept[SwapFaults.Injected] {
+      SwapFaults.failing(Swap.MoveAside,
+        _.startsWith(s"$dir/db1.t1/bucket="))(sink.write(b1, target, 1))
+    }
+    // an open recovers the pre-batch state
+    assert(state(sink) == Seq((1L, 10), (2L, 20), (3L, 30)))
+    sink.write(b1, target, 1) // at-least-once replay
+    val oneShot = new BucketedUpsertSink(
+      Files.createTempDirectory("bucket-sink-clean").toString, buckets = 4)
+    oneShot.write(b0, target, 0)
+    oneShot.write(b1, target, 1)
+    assert(state(sink) == state(oneShot))
+    assert(state(sink) == Seq((1L, 10), (2L, 21), (4L, 40)))
+    val names = Files.list(Paths.get(dir, "db1.t1")).iterator()
+    names.forEachRemaining(p =>
+      assert(!p.getFileName.toString.startsWith("."), s"leftover $p"))
+  }
+
   test("untouched buckets are not rewritten") {
     val dir = Files.createTempDirectory("bucket-sink2").toString
     val sink = new BucketedUpsertSink(dir, buckets = 16)

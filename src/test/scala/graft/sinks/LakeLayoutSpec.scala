@@ -136,12 +136,30 @@ class LakeLayoutSpec extends SparkSpec {
     // simulate the crash window: table moved aside, replacement never
     // moved in
     java.nio.file.Files.move(java.nio.file.Paths.get(dir),
-      java.nio.file.Paths.get(dir + ".old"))
+      java.nio.file.Paths.get(dir).resolveSibling(".aside-t"))
     LakeLayout.compact(spark, dir, partCols = Seq("day"),
       sortCols = Seq("user_id"))
     assert(spark.read.parquet(dir).count() == n,
       "recovery must restore the moved-aside table before compacting")
-    assert(!Files.exists(java.nio.file.Paths.get(dir + ".old")))
+    assert(!Files.exists(java.nio.file.Paths.get(dir).resolveSibling(".aside-t")))
+  }
+
+  test("an append after a torn compact lands beside the pre-swap rows") {
+    val dir = Files.createTempDirectory("lake-torn").toString + "/t"
+    def rows(ids: Long*) = ids.map(i => (i, i % 2)).toDF("id", "day")
+    LakeLayout.write(rows(1L, 2L), dir, partCols = Seq("day"),
+      sortCols = Seq("id"))
+    intercept[SwapFaults.Injected] {
+      SwapFaults.failing(Swap.MoveAside, _ == dir)(LakeLayout.compact(
+        spark, dir, partCols = Seq("day"), sortCols = Seq("id")))
+    }
+    assert(!Files.exists(java.nio.file.Paths.get(dir)), "the fault tore the swap")
+    LakeLayout.write(rows(3L), dir, partCols = Seq("day"),
+      sortCols = Seq("id"), mode = "append")
+    LakeLayout.compact(spark, dir, partCols = Seq("day"), sortCols = Seq("id"))
+    assert(spark.read.parquet(dir).select($"id").as[Long].collect().sorted
+      .toSeq == Seq(1L, 2L, 3L))
+    assert(!Files.exists(java.nio.file.Paths.get(dir).resolveSibling(".aside-t")))
   }
 
   test("compact merges a fragmented layout, preserving data and clustering") {
@@ -176,7 +194,8 @@ class LakeLayoutSpec extends SparkSpec {
       .orderBy("event_id").collect()
     assert(got.map(_.getLong(0)).toSeq == expected.map(_.getLong(0)).toSeq)
     assert(got.length == expected.length)
-    assert(!Files.exists(java.nio.file.Paths.get(dir + ".old")),
+    val live = java.nio.file.Paths.get(dir)
+    assert(!Files.exists(live.resolveSibling(s".aside-${live.getFileName}")),
       "swap must clean up the move-aside dir")
   }
 }

@@ -16,7 +16,7 @@ import graft.SparkSpec
 import graft.cdc.ChangeEvent
 import graft.meta.{ColumnDef, DdlParser, DdlStatement, SchemaRegistry, TableDef}
 import graft.operators.Transforms
-import graft.sinks.ParquetUpsertSink
+import graft.sinks.{ParquetUpsertSink, Swap, SwapFaults}
 
 /** End-to-end changelog replay (SURVEY §5.2): MemoryStream envelope
   * → route → transform → compact → parquet upsert sink, asserted
@@ -213,6 +213,56 @@ class PipelineSpec extends SparkSpec {
     val cleanDir = Files.createTempDirectory("graft-clean").toString
     drain(mem, multiRoutes, new ParquetUpsertSink(cleanDir),
       Files.createTempDirectory("graft-clean-ckpt").toString)
+    val want = oracle(log)
+    (distinct :+ "shared").foreach { t =>
+      assert(stateOf(dir, t) == stateOf(cleanDir, t), s"target $t")
+      assert(stateOf(dir, t) == want(t), s"target $t")
+    }
+  }
+
+  test("multi-route batch: a torn swap in one target fails the batch after " +
+      "every group finished; a restart equals a clean drain and the oracle") {
+    val dir = Files.createTempDirectory("graft-torn").toString
+    val ckpt = Files.createTempDirectory("graft-torn-ckpt").toString
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[ChangeEvent]
+    // batch 1 touches keys 1-4 only: keys 5-8 survive from batch 0
+    // only if the torn swap's pre-batch state is recovered
+    val first = multiLog(13)
+    val second = multiLog(14).filter(_.after("id").toLong <= 4)
+      .map(e => e.copy(seq = e.seq + first.size))
+    val log = first ++ second
+    mem.addData(first: _*)
+    assert(drain(mem, multiRoutes, new ParquetUpsertSink(dir), ckpt).exception.isEmpty)
+
+    // batch 1 tears t2's swap between move-aside and move-in while the
+    // other groups write
+    mem.addData(second: _*)
+    val t2 = s"$dir/db1.t2"
+    val sink = new RecordingSink(new ParquetUpsertSink(dir), sleepMs = 200)
+    val q = SwapFaults.failing(Swap.MoveAside, _ == t2)(
+      drain(mem, multiRoutes, sink, ckpt))
+    val err = q.exception.getOrElse(fail("the batch should have failed"))
+    val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(_.isInstanceOf[SwapFaults.Injected]), err)
+    val atEnd = sink.log.asScala.toVector
+    assert(sink.inFlight.get == 0)
+    assert(atEnd.nonEmpty && !atEnd.exists(_.table == "t2"))
+    assert(!Files.exists(Paths.get(t2)), "t2's swap should be torn")
+    assert(!Files.exists(Paths.get(ckpt, "commits", "1")))
+    Thread.sleep(400)
+    assert(sink.log.asScala.toVector == atEnd)
+
+    // the restart replays batch 1 over the recovered pre-batch state
+    val q2 = drain(mem, multiRoutes, new ParquetUpsertSink(dir), ckpt)
+    assert(q2.exception.isEmpty, q2.exception)
+    // (a fresh stream: a MemoryStream drops the offsets a query commits)
+    val cleanDir = Files.createTempDirectory("graft-torn-clean").toString
+    val cleanMem = MemoryStream[ChangeEvent]
+    cleanMem.addData(first: _*)
+    cleanMem.addData(second: _*)
+    drain(cleanMem, multiRoutes, new ParquetUpsertSink(cleanDir),
+      Files.createTempDirectory("graft-torn-clean-ckpt").toString)
     val want = oracle(log)
     (distinct :+ "shared").foreach { t =>
       assert(stateOf(dir, t) == stateOf(cleanDir, t), s"target $t")
