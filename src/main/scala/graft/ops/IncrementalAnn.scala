@@ -104,7 +104,6 @@ object IncrementalAnn {
   def create(spark: SparkSession, corpus: DataFrame, vecCol: String,
       idCol: String, dir: String, nCells: Int = 16,
       rounds: Int = 1): Unit = {
-    Swap.open(spark, s"$dir/vectors")
     val (hfs, p) = Swap.fs(spark, dir)
     val marker = new org.apache.hadoop.fs.Path(p, "_graft_cells")
     if (hfs.exists(marker)) hfs.delete(marker, false)
@@ -180,9 +179,9 @@ object IncrementalAnn {
     * The rewrite replaces `vectors/` through [[Swap]]; every open
     * of the index recovers a torn swap first. */
   def compact(spark: SparkSession, dir: String): Unit = {
-    val (hfs, vec) = Swap.open(spark, s"$dir/vectors")
+    readCells(spark, dir) // recovers; fails loudly on a half-built index
+    val (hfs, vec) = Swap.fs(spark, s"$dir/vectors")
     if (!hfs.exists(vec)) return
-    readCells(spark, dir) // fail loudly on a half-built index
     Swap(hfs, vec)(staged => spark.read.parquet(vec.toString)
       .groupBy(col("cell"), col("id"))
       .agg(min(struct(col("vec"), col("nrm"))).as("v"))

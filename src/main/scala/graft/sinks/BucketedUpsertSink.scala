@@ -37,7 +37,7 @@ final class BucketedUpsertSink(rootDir: String, buckets: Int = 64)
 
   override def write(batch: DataFrame, t: TableDef, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val (hfs, dir) = Swap.open(spark, tableDir(t))
+    val (hfs, dir) = Swap.fs(spark, tableDir(t))
     val pks = t.pkColumns.map(_.name)
     require(pks.nonEmpty,
       s"${t.schema}.${t.name}: BucketedUpsertSink requires primary keys " +
@@ -101,7 +101,7 @@ final class BucketedUpsertSink(rootDir: String, buckets: Int = 64)
 
   def read(t: TableDef): DataFrame = {
     val spark = org.apache.spark.sql.SparkSession.active
-    val (hfs, dir) = Swap.open(spark, tableDir(t))
+    val (hfs, dir) = Swap.fs(spark, tableDir(t))
     recoverBuckets(hfs, dir)
     spark.read.parquet(dir.toString).drop("bucket")
   }

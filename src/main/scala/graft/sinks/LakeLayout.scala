@@ -45,10 +45,19 @@ object LakeLayout {
   def write(df: DataFrame, path: String, partCols: Seq[String],
       sortCols: Seq[String], filesPerPartition: Int = 1,
       maxRecordsPerFile: Long = 0L, mode: String = "overwrite"): Unit = {
-    require(partCols.nonEmpty, "need at least one partition column")
     // an append must land beside the pre-swap rows, not start a fresh
     // table while they sit in the aside copy
     Swap.open(df.sparkSession, path)
+    layout(df, path, partCols, sortCols, filesPerPartition,
+      maxRecordsPerFile, mode)
+  }
+
+  /** [[write]] without the recovery, for [[compact]]'s staged write:
+    * a staging dir never has a torn swap of its own. */
+  private def layout(df: DataFrame, path: String, partCols: Seq[String],
+      sortCols: Seq[String], filesPerPartition: Int,
+      maxRecordsPerFile: Long, mode: String): Unit = {
+    require(partCols.nonEmpty, "need at least one partition column")
     val keys: Seq[Column] =
       if (filesPerPartition <= 1) partCols.map(col)
       else partCols.map(col) :+
@@ -122,7 +131,8 @@ object LakeLayout {
   def compact(spark: SparkSession, path: String, partCols: Seq[String],
       sortCols: Seq[String], filesPerPartition: Int = 1): Unit = {
     val (hfs, live) = Swap.open(spark, path)
-    Swap(hfs, live)(staged => write(spark.read.parquet(live.toString),
-      staged.toString, partCols, sortCols, filesPerPartition))
+    Swap(hfs, live)(staged => layout(spark.read.parquet(live.toString),
+      staged.toString, partCols, sortCols, filesPerPartition, 0L,
+      "overwrite"))
   }
 }

@@ -14,16 +14,23 @@ import org.apache.spark.sql.SparkSession
   *  1. clear stale staging `.staging-d`, then write the new content
   *     there;
   *  2. move `d` aside to `.aside-d` (skipped when `d` is absent);
-  *  3. move the staged dir in as `d` — a missing staged dir leaves
-  *     `d` removed (a bucket whose every row was deleted);
+  *  3. move the staged dir in as `d` — in a per-child [[commit]], a
+  *     missing staged dir leaves `d` removed (a bucket whose every
+  *     row was deleted);
   *  4. drop `.aside-d`.
   *
   * Nothing is deleted before its replacement is in place, so a crash
   * after any step leaves `d` holding the old or the new content, or
   * missing with the old content at `.aside-d`. [[recover]] puts that
-  * aside copy back; any other aside copy or staging dir is garbage.
-  * At-least-once replay then re-runs the interrupted batch against
-  * the old content, which the idempotent writers make harmless.
+  * aside copy back; any other aside copy is garbage. At-least-once
+  * replay then re-runs the interrupted batch against the old
+  * content, which the idempotent writers make harmless.
+  *
+  * Readers recover too, so [[recover]] may run while a writer is
+  * mid-swap. It therefore never touches staging (step 1 of the next
+  * swap clears a stale one), and the only move it makes — the aside
+  * copy back into a missing `d` — makes the writer's own move-in
+  * fail loudly instead of losing either copy.
   *
   * Staging and aside names are fixed per live dir: one directory is
   * rewritten by one writer at a time (a CDC batch's route groups
@@ -70,10 +77,12 @@ object Swap {
     new Path(live.getParent, s".aside-${live.getName}")
 
   /** Replace `live` with what `write` puts at the staging path it is
-    * given. A write that leaves no staged dir removes `live`. */
+    * given. A write that leaves no staged dir fails, keeping `live`. */
   def apply(hfs: FileSystem, live: Path)(write: Path => Unit): Unit =
     withStaging(hfs, live) { staged =>
       write(staged)
+      if (!hfs.exists(staged)) throw new IllegalStateException(
+        s"swap: the write left nothing at $staged; $live is kept")
       commit(hfs, live, staged)
     }
 
@@ -88,10 +97,18 @@ object Swap {
     hfs.delete(staged, true)
   }
 
-  /** Steps 2–4: move `staged` in as `live`. */
+  /** Steps 2–4: move `staged` in as `live`; a missing `staged`
+    * removes `live`. A torn `live` (missing, its old content aside)
+    * fails: the caller skipped [[recover]], so `staged` was built
+    * without the old content, and dropping the aside copy would lose
+    * it. */
   def commit(hfs: FileSystem, live: Path, staged: Path): Unit = {
     val a = aside(live)
-    hfs.delete(a, true)
+    if (hfs.exists(a)) {
+      if (!hfs.exists(live)) throw new IllegalStateException(
+        s"swap: $live is torn (its old content is at $a); recover it first")
+      hfs.delete(a, true)
+    }
     if (hfs.exists(live)) move(hfs, live, a)
     faultHook(MoveAside, live)
     if (hfs.exists(staged)) move(hfs, staged, live)
@@ -101,14 +118,12 @@ object Swap {
   }
 
   /** Undo a torn swap of `live`: a missing `live` gets its aside copy
-    * back; otherwise the aside copy is garbage. Stale staging goes
-    * either way. */
+    * back; otherwise the aside copy is garbage. */
   def recover(hfs: FileSystem, live: Path): Unit = {
     val a = aside(live)
     if (hfs.exists(a)) {
       if (hfs.exists(live)) hfs.delete(a, true) else move(hfs, a, live)
     }
-    hfs.delete(staging(live), true)
   }
 
   /** [[recover]] every child of `dir` that a torn swap left an aside

@@ -35,6 +35,9 @@ class SwapSpec extends AnyFunSuite {
     hfs.listStatus(dir).map(_.getPath.getName)
       .filter(n => n.startsWith(".aside-") || n.startsWith(".staging-")).toSeq
 
+  private def asides(dir: Path): Seq[String] =
+    leftovers(dir).filter(_.startsWith(".aside-"))
+
   test("a swap puts the staged content live and leaves no aside or staging") {
     val r = root()
     val live = new Path(r, "t")
@@ -50,7 +53,7 @@ class SwapSpec extends AnyFunSuite {
   }
 
   test("a fault after every step: recover leaves live old or new, never " +
-      "missing, and no aside") {
+      "missing, and no aside; the next swap clears the stale staging") {
     val expected = Seq(Swap.ClearStaging -> "old", Swap.MoveAside -> "old",
       Swap.MoveIn -> "new", Swap.DropAside -> "new")
     expected.foreach { case (step, want) =>
@@ -64,8 +67,58 @@ class SwapSpec extends AnyFunSuite {
       if (step == Swap.MoveAside) assert(!hfs.exists(live), "torn: live is aside")
       Swap.recover(hfs, live)
       assert(content(live).contains(want), s"after a fault at $step")
+      assert(asides(r).isEmpty, s"after a fault at $step")
+      Swap(hfs, live)(put(_, "next"))
+      assert(content(live).contains("next"), s"after a fault at $step")
       assert(leftovers(r).isEmpty, s"after a fault at $step")
     }
+  }
+
+  test("a recover between the staged write and the commit (a reader " +
+      "opening the dir) leaves live holding the new content") {
+    val r = root()
+    val live = new Path(r, "t")
+    put(live, "old")
+    Swap(hfs, live) { staged =>
+      put(staged, "new")
+      Swap.recover(hfs, live)
+    }
+    assert(content(live).contains("new"))
+    assert(leftovers(r).isEmpty)
+  }
+
+  test("a recover between move-aside and move-in puts the old content " +
+      "back, and the writer's move-in fails loudly instead of losing it") {
+    val r = root()
+    val live = new Path(r, "t")
+    put(live, "old")
+    val prev = Swap.faultHook
+    Swap.faultHook = (step, at) =>
+      if (step == Swap.MoveAside && at == live) Swap.recover(hfs, live)
+    try intercept[IllegalStateException](Swap(hfs, live)(put(_, "new")))
+    finally Swap.faultHook = prev
+    assert(content(live).contains("old"))
+    assert(asides(r).isEmpty)
+    // the replayed write then swaps normally
+    Swap(hfs, live)(put(_, "new"))
+    assert(content(live).contains("new"))
+    assert(leftovers(r).isEmpty)
+  }
+
+  test("a commit onto a torn dir that skipped recover fails loudly and " +
+      "keeps the aside copy") {
+    val r = root()
+    val live = new Path(r, "t")
+    put(Swap.aside(live), "old")
+    intercept[IllegalStateException] {
+      Swap.withStaging(hfs, live) { staged =>
+        put(staged, "new")
+        Swap.commit(hfs, live, staged)
+      }
+    }
+    assert(content(Swap.aside(live)).contains("old"))
+    Swap.recover(hfs, live)
+    assert(content(live).contains("old"))
   }
 
   test("a move onto an existing destination fails loudly instead of nesting") {
@@ -81,13 +134,18 @@ class SwapSpec extends AnyFunSuite {
     intercept[java.io.IOException](Swap.move(hfs, new Path(r, "none"), new Path(r, "c")))
   }
 
-  test("a missing staged dir removes live") {
+  test("a per-child commit with no staged dir removes live; a swap " +
+      "whose write left nothing fails and keeps live") {
     val r = root()
-    val live = new Path(r, "t")
+    val table = new Path(r, "t")
+    val live = new Path(table, "bucket=1")
     put(live, "old")
-    Swap(hfs, live)(_ => ())
+    intercept[IllegalStateException](Swap(hfs, live)(_ => ()))
+    assert(content(live).contains("old"))
+    Swap.withStaging(hfs, table)(staged =>
+      Swap.commit(hfs, live, new Path(staged, "bucket=1")))
     assert(!hfs.exists(live))
-    assert(leftovers(r).isEmpty)
+    assert(leftovers(r).isEmpty && leftovers(table).isEmpty)
   }
 
   test("recover on one table never touches a sibling table's swap") {
@@ -102,7 +160,8 @@ class SwapSpec extends AnyFunSuite {
     put(Swap.staging(a), "stale")
     Swap.recover(hfs, a)
     assert(content(a).contains("a"))
-    assert(!hfs.exists(Swap.staging(a)))
+    // staging may belong to a swap in flight: only step 1 clears it
+    assert(content(Swap.staging(a)).contains("stale"))
     assert(content(Swap.aside(a2)).contains("a2-old"))
     assert(content(Swap.staging(a2)).contains("a2-new"))
     // recover on an intact or absent dir changes nothing else
@@ -111,6 +170,6 @@ class SwapSpec extends AnyFunSuite {
     // a dir's listing recovers every torn child, here the sibling
     Swap.recoverChildren(hfs, r, hfs.listStatus(r).map(_.getPath).toSeq)
     assert(content(a2).contains("a2-old"))
-    assert(leftovers(r).isEmpty)
+    assert(asides(r).isEmpty)
   }
 }
