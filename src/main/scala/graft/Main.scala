@@ -27,11 +27,12 @@ import graft.streaming.{Metrics, MetricsHttp, Pipeline, Registry}
   *  - `[output]` — `type` (plugin name in [[Registry.sinkNames]]) +
   *    its options (`dir` / `url` / `user` / `password`…)
   *  - `[[routers]]` / `[[transforms]]` — as in PipelineConfig
-  *  - `[meta]` — where target schemas come from: `ddl-file` (a SQL
-  *    script of CREATE TABLEs applied through the engine's DDL
-  *    parser — the file IS the schema snapshot) and/or `default-db`
-  *    (≙ the reference's LoadMeta from the live target; a JDBC url in
-  *    the file's place plugs in `JdbcMeta` unchanged). Optional
+  *  - `[meta]` — where target schemas come from: `ddl-file` (also
+  *    `--ddl-file`), a local SQL script of CREATE TABLEs read from
+  *    disk and applied through the engine's DDL parser — the file IS
+  *    the schema snapshot, standing in for the reference's LoadMeta
+  *    from the live target; `default-db` names the database for
+  *    CREATE TABLEs that do not qualify their table name. Optional
   *    `evolve = "true"`: in-stream DDL updates the registry
   *    (version-pinned decode, no restart) and — with
   *    `forward-ddl-url` (+ `forward-ddl-dialect`/`-user`/`-password`)

@@ -233,46 +233,6 @@ object WarcFixture {
     out
   }
 
-  /** Sized shard for soak/throughput runs ([[graft.WarcSoakMain]]):
-    * `nPages` response records of ~`payloadBytes` LOW-compressibility
-    * pseudo-text each (seeded by shard id — deterministic), one gzip
-    * member per record when `gzip` (the .warc.gz convention). The
-    * low compressibility matters: repetitive fixture text would make
-    * a "1 GB" shard dir inflate 50×, which measures the inflater,
-    * not the drain. */
-  def buildSized(id: Long, nPages: Int, payloadBytes: Int,
-      gzip: Boolean): Array[Byte] = {
-    require(nPages > 0 && payloadBytes >= 64,
-      s"buildSized: bad nPages=$nPages payloadBytes=$payloadBytes")
-    val out = new java.io.ByteArrayOutputStream(
-      nPages * (payloadBytes + 256))
-    def emit(rec: Array[Byte]): Unit =
-      if (!gzip) out.write(rec, 0, rec.length)
-      else {
-        val g = new java.util.zip.GZIPOutputStream(out)
-        // close, not just finish: finish alone leaves the native
-        // Deflater un-ended (one leaked native buffer PER RECORD at
-        // soak scale, reclaimed only at GC/cleaner time); close ends
-        // it and is harmless to the ByteArrayOutputStream underneath
-        g.write(rec); g.close()
-      }
-    val rnd = new java.util.Random(id * 7919L + 17L)
-    var i = 0
-    while (i < nPages) {
-      val body = new java.lang.StringBuilder(payloadBytes + 64)
-      body.append("<html><body><p>")
-      while (body.length < payloadBytes) {
-        body.append(java.lang.Long.toHexString(rnd.nextLong()))
-        body.append(' ')
-      }
-      body.append("</p></body></html>")
-      emit(record("response", uri(id, i), "text/html",
-        body.toString.getBytes("UTF-8"), i))
-      i += 1
-    }
-    out.toByteArray
-  }
-
   /** A hostile .warc.gz member: tiny on disk, inflating past
     * [[WarcRecords]]' 256 MB guard — the decompression-bomb shape the
     * ingest path must DROP (null records, zero rows), never buffer. */

@@ -2,9 +2,8 @@ package graft.meta
 
 import org.apache.spark.sql.types._
 
-/** Table/column metadata model ≙ `metas/table.go:23-38` — but mapped
-  * onto Spark's StructType with field Metadata for the attributes
-  * Spark lacks natively (primary-key flag, raw MySQL type, comment).
+/** Table/column metadata model ≙ `metas/table.go:23-38`; a column's
+  * Spark type comes from its raw MySQL type through [[MySqlTypes]].
   */
 final case class ColumnDef(
     name: String,
@@ -13,14 +12,6 @@ final case class ColumnDef(
     comment: String = "") {
 
   def sparkType: DataType = MySqlTypes.toSpark(rawType)
-
-  def toField: StructField = {
-    val mb = new MetadataBuilder()
-      .putString("rawType", rawType)
-      .putBoolean("isPrimaryKey", isPrimaryKey)
-    if (comment.nonEmpty) mb.putString("comment", comment)
-    StructField(name, sparkType, nullable = !isPrimaryKey, mb.build())
-  }
 }
 
 final case class TableDef(
@@ -34,8 +25,6 @@ final case class TableDef(
   def columnNames: Seq[String] = columns.map(_.name)
   def column(n: String): Option[ColumnDef] =
     columns.find(_.name.equalsIgnoreCase(n))
-
-  def toStructType: StructType = StructType(columns.map(_.toField))
 
   /** Key used by the versioned registry
     * (≙ `metas/routers.go:62-64` `schema:table:version`). */

@@ -11,11 +11,11 @@ import graft.operators.Compactor
   * Framework", 2019) and Debezium's incremental-snapshot feature.
   *
   * The reference starts replication at the current position and never
-  * backfills (`inputs/mysql/mysql_position.go:37-54`); `Backfill`
-  * fixes that with a stop-the-world snapshot. This operator removes
-  * the stop-the-world: the table is read in PK-ordered chunks WHILE
-  * the change stream keeps flowing, and correctness is restored per
-  * chunk by the DBLog window rule —
+  * backfills (`inputs/mysql/mysql_position.go:37-54`), and a plain
+  * snapshot backfill has to stop the world. This operator does not:
+  * the table is read in PK-ordered chunks WHILE the change stream
+  * keeps flowing, and correctness is restored per chunk by the DBLog
+  * window rule —
   *
   *   record stream position L (low watermark), read the chunk,
   *   record position H (high watermark); any key of the chunk that
@@ -27,10 +27,9 @@ import graft.operators.Compactor
   * Keys untouched during the window keep their snapshot row; keys
   * changed after H win at the sink anyway because every sink in this
   * engine arbitrates by seq (snapshot rows carry seq = -1, below any
-  * live event — `Backfill.asInsertBatch`). The net invariant, pinned
-  * by ChunkedSnapshotSpec: final sink state equals the compaction of
-  * the full history, no matter how chunk reads and stream progress
-  * interleave.
+  * live event). The net invariant, pinned by ChunkedSnapshotSpec:
+  * final sink state equals the compaction of the full history, no
+  * matter how chunk reads and stream progress interleave.
   *
   * 100 TB shape: each chunk reconciliation is one anti-join of a
   * bounded chunk against the bounded window slice of the stream —
@@ -53,13 +52,6 @@ object ChunkedSnapshot {
     * monotone-in-pk assignment satisfies the reconciliation rule. */
   def chunkId(pk: Column, width: Long): Column =
     call_function("div", pk, lit(width))
-
-  /** DBLog window rule for one chunk: drop snapshot rows whose key
-    * saw a change event inside the chunk's watermark window. */
-  def reconcileChunk(chunkRows: DataFrame, windowEvents: DataFrame,
-      keys: Seq[String]): DataFrame =
-    chunkRows.join(windowEvents.select(keys.map(col): _*).distinct(),
-      keys, "left_anti")
 
   /** Batch simulation of a FULL interleaved backfill over a recorded
     * changelog, used both by the oracle-checked query and by the

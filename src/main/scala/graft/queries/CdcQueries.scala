@@ -349,9 +349,9 @@ object CdcQueries {
     }),
 
     // event-time interval join, batch-verified: each purchase paired
-    // with the same user's signups within ±1h — the BATCH twin of
-    // StatefulOps.intervalJoin (equi-join on the key + residual time
-    // bound; the keyed-join shape that lets streaming state GC).
+    // with the same user's signups within ±1h (equi-join on the key +
+    // residual time bound; the keyed-join shape that lets a streaming
+    // twin GC its state).
     // Exact integer-ns bound math on both engines.
     "cdc_interval_join" -> ((s, dir) => {
       val ev = events(s, dir)

@@ -52,7 +52,7 @@ object DdlForward {
   val MySql: Dialect = Dialect("mysql", backtick, identity,
     supportsPosition = true, supportsModify = true)
 
-  /** Derby — the live in-sandbox target (JdbcMetaLiveSpec's engine):
+  /** Derby — the in-process live target (SchemaEvolutionSpec's engine):
     * no column positioning, no general type MODIFY (only VARCHAR
     * widening, which stays on the restart fallback), MySQL types
     * mapped onto Derby's. */
@@ -66,8 +66,7 @@ object DdlForward {
   }
 
   /** MySQL → Derby type mapping for forwarded ADDs. Unknown types
-    * fall back to LONG VARCHAR (the lossless-text escape hatch, same
-    * choice JdbcMeta makes for unmapped source types). */
+    * fall back to LONG VARCHAR (the lossless-text escape hatch). */
   private[sinks] def derbyType(raw: String): String = {
     val t = raw.trim.toLowerCase
     val base = t.takeWhile(c => c != '(' && c != ' ')

@@ -189,11 +189,11 @@ final class BinlogClient(
     * "...have been purged...") names neither what WE asked for nor
     * the recovery, so rethrow with both: continuing from the
     * checkpoint is impossible and events in the gap are gone — the
-    * only correct recovery is a fresh snapshot backfill
-    * (Backfill/ChunkedSnapshot) before resuming from the master's
-    * CURRENT coordinates. The ERR arrives as the first dump-stream
-    * response, i.e. inside the iterator's first advance — hence the
-    * wrapper, not a try around the command write. */
+    * only correct recovery is a fresh snapshot backfill before
+    * resuming from the master's CURRENT coordinates. The ERR arrives
+    * as the first dump-stream response, i.e. inside the iterator's
+    * first advance — hence the wrapper, not a try around the command
+    * write. */
   private def framesOrExplainPurged(
       resumeFrom: String): Iterator[BinlogClient.Frame] = {
     val it = frames()

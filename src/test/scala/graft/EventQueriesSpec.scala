@@ -2,11 +2,14 @@ package graft
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.DecimalType
 
 /** Pins the event-analytics queries' semantics beyond the DuckDB
   * oracle: the banded lateness prefix-max must equal the naive
-  * global-window form it replaces, and funnel stages must be
-  * monotone (a user can't convert without reaching the prior stage).
+  * global-window form it replaces, funnel stages must be monotone
+  * (a user can't convert without reaching the prior stage), and the
+  * hourly rollup must equal its Structured Streaming replay.
   */
 class EventQueriesSpec extends SparkSpec {
   import spark.implicits._
@@ -106,5 +109,43 @@ class EventQueriesSpec extends SparkSpec {
     val users = Tables.loadEventsNs(spark, sfDir)
       .select($"user_id").distinct().count()
     assert(byCohort.values.map(_.find(_._2 == 0L).get._3).sum == users)
+  }
+
+  test("tumbling-window stream ≡ batch cdc_hourly_rollup on the same events") {
+    // the oracle-checked batch rollup replayed as a Structured
+    // Streaming aggregate over the same parquet, ts normalized through
+    // the same contract probe the batch loader uses
+    val eventsDir = java.nio.file.Files.createTempDirectory("graft-twin-events")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sfDir/events.parquet"),
+      eventsDir.resolve("events.parquet"))
+    eventsDir.toFile.deleteOnExit()
+    eventsDir.resolve("events.parquet").toFile.deleteOnExit()
+    val schema = Tables.load(spark, sfDir, "events").schema
+    val streamEvents = Tables.normalizeTsNs(
+      spark.readStream.schema(schema).parquet(eventsDir.toString))
+
+    val batch = SparkEntry.queries("cdc_hourly_rollup")(spark, sfDir)
+      .select(col("hr").cast("string"), col("event_type"), col("n"),
+        col("sum_value"))
+      .collect().map(_.toString).toSet
+
+    val rollup = streamEvents
+      .withColumn("hr_t", timestamp_micros(expr("ts div 1000")))
+      .groupBy(window(col("hr_t"), "1 hour"), col("event_type"))
+      .agg(count(lit(1)).as("n"),
+        sum(col("value").cast(DecimalType(18, 2))).cast("double")
+          .as("sum_value"))
+      .select(col("window.start").cast("timestamp_ntz").cast("string").as("hr"),
+        col("event_type"), col("n"), col("sum_value"))
+    // complete mode emits every group's final state without coupling
+    // the test to watermark-flush timing
+    val q = rollup.writeStream.format("memory").queryName("twin_rollup")
+      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
+    assert(q.awaitTermination(120000), "twin_rollup did not finish")
+    val streamed = spark.table("twin_rollup").collect().map(_.toString).toSet
+
+    assert(streamed == batch,
+      s"streaming rollup diverges: only-stream=${(streamed -- batch).take(5)} " +
+        s"only-batch=${(batch -- streamed).take(5)}")
   }
 }

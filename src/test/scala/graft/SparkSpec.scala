@@ -12,7 +12,7 @@ object TestSpark {
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.ui.enabled", "false")
-    // bucketed-table tests register external tables; keep catalog
+    // catalog tests register external tables; keep catalog
     // metadata out of the repo tree
     .config("spark.sql.warehouse.dir",
       System.getProperty("java.io.tmpdir") + "/graft-test-warehouse")

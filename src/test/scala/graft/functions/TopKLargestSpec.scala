@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -90,5 +91,30 @@ class TopKLargestSpec extends SparkSpec {
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("ObjectHashAggregate"), p)
     assert("partial_topk_largest".r.findAllIn(p).nonEmpty, p)
+  }
+
+  test("topk_largest runs as a streaming aggregate (update mode)") {
+    // the custom TypedImperativeAggregate must compose with
+    // Structured Streaming: partial heaps live in the state store and
+    // merge across micro-batches exactly as they merge across tasks
+    implicit val ctx = spark.sqlContext
+    val mem = MemoryStream[(String, Double)]
+    val agg = mem.toDF().toDF("g", "v")
+      .groupBy($"g")
+      .agg(expr("topk_largest(v, 3)").as("top"))
+    val q = agg.writeStream.format("memory").queryName("topk_out")
+      .outputMode("update").start()
+    mem.addData(("a", 1.0), ("a", 5.0), ("b", 2.0))
+    q.processAllAvailable()
+    // second batch: the heap state must carry over, not reset
+    mem.addData(("a", 9.0), ("a", 3.0), ("a", 0.5), ("b", 7.0))
+    q.processAllAvailable(); q.stop()
+    // memory sink in update mode appends updated rows; last row per
+    // group is the current state
+    val rows = spark.table("topk_out").collect()
+      .map(r => r.getString(0) -> r.getSeq[Double](1).toSeq)
+    val last = rows.zipWithIndex.groupBy(_._1._1).view
+      .mapValues(_.maxBy(_._2)._1._2).toMap
+    assert(last == Map("a" -> Seq(9.0, 5.0, 3.0), "b" -> Seq(7.0, 2.0)))
   }
 }

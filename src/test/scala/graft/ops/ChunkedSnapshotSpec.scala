@@ -33,14 +33,6 @@ class ChunkedSnapshotSpec extends SparkSpec {
       if (last._3 == "delete") None else Some(k -> last._4)
     }
 
-  test("reconcileChunk drops exactly the keys changed in the window") {
-    val chunk = Seq((1L, 10.0), (2L, 20.0), (3L, 30.0)).toDF("user_id", "v")
-    val window = Seq(Tuple1(2L), Tuple1(9L)).toDF("user_id")
-    val out = ChunkedSnapshot.reconcileChunk(chunk, window, Seq("user_id"))
-      .select("user_id").as[Long].collect().sorted
-    assert(out.toSeq == Seq(1L, 3L))
-  }
-
   test("arbitrated sink: backfill + live tail == full-history compaction, randomized") {
     val rnd = new scala.util.Random(42)
     // negative pks included: their chunk index clamps to 0, so the
@@ -92,7 +84,7 @@ class ChunkedSnapshotSpec extends SparkSpec {
 
   test("blind-replay sink: the window rule is load-bearing") {
     // key 0 (chunk 0, width 4): insert v=1 at seq 1, update v=99 at
-    // seq 5. Backfill starts at seq 2 → L_0=2, H_0=12. The chunk read
+    // seq 5. The backfill starts at seq 2 → L_0=2, H_0=12. The chunk read
     // sees v=1; seq-5 lands INSIDE (2,12], so the row is ambiguous.
     val rows = Seq((0L, 1L, "insert", 1.0), (0L, 5L, "update", 99.0))
     val df = changelog(rows)

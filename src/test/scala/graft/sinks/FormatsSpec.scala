@@ -70,6 +70,18 @@ class FormatsSpec extends SparkSpec {
     assert(v.contains(""""type":"INSERT""""))
     assert(v.contains(""""isDdl":false"""))
     assert(v.contains(""""serverId":"""""))
+    // what a Canal consumer reads back: id, identity, gtid, event
+    // time, and the after/before images as one-element arrays
+    val upd = Seq(ChangeEvent("db1", "t1", "update",
+      new Timestamp(1700000002000L), "gtid:3", 3L, 0,
+      Map("id" -> "1", "k" -> "11", "c" -> "a"),
+      Map("id" -> "1", "k" -> "10", "c" -> "a"))).toDF()
+    val u = Formats.canalJson(upd, t).as[String].collect().head
+    assert(u.startsWith(
+      """{"id":3,"database":"db1","table":"t1","gtid":["gtid:3"],"""), u)
+    assert(u.contains(""""type":"UPDATE","es":1700000002000,"""), u)
+    assert(u.contains(""""data":[{"id":"1","k":"11","c":"a"}],""" +
+      """"old":[{"id":"1","k":"10","c":"a"}]}"""), u)
   }
 
   test("canalType maps the reference's Aliyun/MySQL code table") {

@@ -8,46 +8,13 @@ import graft.SparkSpec
 import graft.meta.{ColumnDef, TableDef}
 import graft.sinks.ParquetUpsertSink
 
-/** Backfill + metrics + registry (SURVEY §2 #29-31 and the snapshot
-  * gap row). */
+/** Metrics + registry (SURVEY §2 #29-31). */
 class OpsSpec extends SparkSpec {
-  import spark.implicits._
 
   private val target = TableDef("db1", "t1", Seq(
     ColumnDef("id", "bigint", isPrimaryKey = true),
     ColumnDef("k", "int"),
     ColumnDef("c", "varchar(120)")))
-
-  test("backfill snapshot then stream: CDC events win over snapshot rows") {
-    val sinkDir = Files.createTempDirectory("bf-sink").toString
-    val logDir = Files.createTempDirectory("bf-log").toString
-    val ckpt = Files.createTempDirectory("bf-ckpt").toString
-    val sink = new ParquetUpsertSink(sinkDir)
-
-    // snapshot: ids 1..3
-    val snapshot = Seq((1L, 10, "a"), (2L, 20, "b"), (3L, 30, "c"))
-      .toDF("id", "k", "c")
-    Backfill.run(spark, Map(target -> snapshot), sink)
-    val afterSnap = spark.read.parquet(s"$sinkDir/db1.t1")
-    assert(afterSnap.count() == 3)
-
-    // live CDC: update id 2, delete id 3, insert id 4
-    Files.write(Paths.get(logDir, "s.jsonl"), Seq(
-      s"""{"db":"db1","table":"t1","op":"update","ts":1700000000000,"pos":"g:0","seq":0,"tableVersion":0,"after":{"id":"2","k":"21","c":"b2"},"before":null}""",
-      s"""{"db":"db1","table":"t1","op":"delete","ts":1700000001000,"pos":"g:1","seq":1,"tableVersion":0,"after":{"id":"3","k":"0","c":""},"before":null}""",
-      s"""{"db":"db1","table":"t1","op":"insert","ts":1700000002000,"pos":"g:2","seq":2,"tableVersion":0,"after":{"id":"4","k":"40","c":"d"},"before":null}"""
-    ).mkString("\n").getBytes("UTF-8"))
-
-    val env = Registry.source("changelog", spark, Map("path" -> logDir))
-    val q = Pipeline.start(env, Seq(Pipeline.Route("db1", "t1", target)),
-      sink, ckpt, trigger = Trigger.AvailableNow())
-    q.awaitTermination(120000)
-
-    val state = spark.read.parquet(s"$sinkDir/db1.t1")
-      .select($"id", $"k", $"c").as[(Long, Int, String)].collect().sortBy(_._1)
-    assert(state.toSeq ==
-      Seq((1L, 10, "a"), (2L, 21, "b2"), (4L, 40, "d")))
-  }
 
   test("metrics: observe + listener count rows and deletes per batch") {
     val logDir = Files.createTempDirectory("m-log").toString
