@@ -17,7 +17,12 @@ import graft.streaming.Pipeline.BatchSink
   *   2. determines the TOUCHED bucket set (distinct over the batch —
   *      bounded by n),
   *   3. reads ONLY those buckets' existing state, merges
-  *      (last-event-per-key), and rewrites ONLY those directories.
+  *      (last-event-per-key over state ∪ batch, or over the batch
+  *      alone when no touched bucket holds state), and rewrites ONLY
+  *      those directories.
+  *
+  * The merge is the batch's only compaction: the sink
+  * [[mergesByKey]], so the pipeline hands it the batch uncompacted.
   *
   * Untouched state is never read or written, so batch cost scales
   * with the batch's key spread, not the table size: a 10k-row batch
@@ -35,6 +40,8 @@ final class BucketedUpsertSink(rootDir: String, buckets: Int = 64)
     df.withColumn("bucket",
       pmod(xxhash64(t.pkColumns.map(c => col(c.name)): _*), lit(buckets)))
 
+  override def mergesByKey: Boolean = true
+
   override def write(batch: DataFrame, t: TableDef, batchId: Long): Unit = {
     val spark = batch.sparkSession
     val (hfs, dir) = Swap.fs(spark, tableDir(t))
@@ -50,17 +57,14 @@ final class BucketedUpsertSink(rootDir: String, buckets: Int = 64)
       if (touched.isEmpty) return
       def bucketDir(b: Long) = new Path(dir, s"bucket=$b")
       val existingTouched = touched.filter(b => hfs.exists(bucketDir(b)))
-      val merged =
+      val unioned =
         if (existingTouched.isEmpty) bucketed
-        else {
-          // partition-pruned read: only the touched buckets
-          val existing = spark.read
-            .option("basePath", dir.toString)
-            .parquet(existingTouched.toSeq.map(bucketDir(_).toString): _*)
-          Compactor.lastEventPerKeyAgg(pks, "seq")(
-            existing.unionByName(bucketed, allowMissingColumns = true))
-        }
-      val finalState = merged.filter(col("op") =!= "delete")
+        else spark.read // partition-pruned read: only the touched buckets
+          .option("basePath", dir.toString)
+          .parquet(existingTouched.toSeq.map(bucketDir(_).toString): _*)
+          .unionByName(bucketed, allowMissingColumns = true)
+      val finalState = Compactor.lastEventPerKeyAgg(pks, "seq")(unioned)
+        .filter(col("op") =!= "delete")
       // distributed write to the table's staging dir (never through
       // the driver), then a swap of ONLY the touched bucket dirs. A
       // touched bucket with no surviving rows has no staged dir and

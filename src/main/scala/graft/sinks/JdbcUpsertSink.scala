@@ -15,9 +15,10 @@ import graft.streaming.Pipeline.BatchSink
   * Execution is per-partition on the executors: each partition opens
   * one connection, chunks its rows into bounded multi-row statements,
   * and binds/executes them — nothing flows through the driver. The
-  * incoming batch is already compacted to last-event-per-key, so each
-  * key appears once and upsert/delete ordering within a batch is
-  * immaterial (the reference's order-preserving run-splitting,
+  * sink compacts the batch to last-event-per-key itself (it
+  * [[mergesByKey]], so the pipeline hands it the batch uncompacted),
+  * so each key appears once and upsert/delete ordering within a batch
+  * is immaterial (the reference's order-preserving run-splitting,
   * `outputs/mysql/mysql.go:172-202`, is unnecessary — SURVEY §7.5.1).
   *
   * Statement-level retry: 3 tries with linear 5s·attempt backoff
@@ -39,12 +40,6 @@ import graft.streaming.Pipeline.BatchSink
   *
   * @param connect serializable connection factory, invoked on the
   *                executor (e.g. `() => DriverManager.getConnection(url)`)
-  * @param assumeCompacted skip the defensive per-batch compaction.
-  *                [[graft.streaming.Pipeline.processBatch]] always
-  *                compacts immediately before `sink.write`, so
-  *                pipeline-wired instances set this to avoid paying a
-  *                second full aggregate+shuffle of every micro-batch;
-  *                direct users keep the default (defended) path.
   * @param quarantineTable DLQ table for poison rows; expected columns
   *                `(target_table VARCHAR, op VARCHAR, batch_id BIGINT,
   *                row_json VARCHAR, error VARCHAR)`. None = fail the
@@ -55,8 +50,9 @@ final class JdbcUpsertSink(
     maxRowsPerStatement: Int = 1024,
     retries: Int = 3,
     retryBackoffMs: Long = 5000,
-    assumeCompacted: Boolean = false,
     quarantineTable: Option[String] = None) extends BatchSink {
+
+  override def mergesByKey: Boolean = true
 
   override def write(batch: DataFrame, t: TableDef, batchId: Long): Unit = {
     val cols = t.columnNames
@@ -65,18 +61,14 @@ final class JdbcUpsertSink(
     require(pks.nonEmpty,
       s"${t.schema}.${t.name}: JDBC upsert sink requires primary keys")
     // Upserts run before deletes within a chunk, so correctness needs
-    // ONE event per key. Unless the caller vouches (assumeCompacted —
-    // the Pipeline path, which compacts right before write), don't
-    // trust the scaladoc contract: compact defensively when the batch
-    // carries the monotone `seq` (costs a real aggregate+shuffle of
-    // the batch — that is why the pipeline path opts out), else
-    // verify key-uniqueness and fail loudly — feeding an uncompacted
-    // frame through would silently reorder delete-then-insert
-    // sequences (the ordering the reference preserves via
-    // run-splitting, `outputs/mysql/mysql.go:172-202`).
+    // ONE event per key: compact on the monotone `seq` when the batch
+    // carries it (the pipeline path), else verify key-uniqueness and
+    // fail loudly — feeding an uncompacted frame through would
+    // silently reorder delete-then-insert sequences (the ordering the
+    // reference preserves via run-splitting,
+    // `outputs/mysql/mysql.go:172-202`).
     val safe =
-      if (assumeCompacted) batch
-      else if (batch.columns.contains("seq"))
+      if (batch.columns.contains("seq"))
         graft.operators.Compactor.lastEventPerKeyAgg(pks, "seq")(batch)
       else {
         import org.apache.spark.sql.functions.{col, count, lit}

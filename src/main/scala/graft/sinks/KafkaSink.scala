@@ -28,7 +28,8 @@ import graft.streaming.Pipeline.BatchSink
   * Record assembly ([[records]]) is a pure plan, unit-tested without
   * a broker. The envelope re-built from the routed batch carries
   * `old = null`: the reference emits the pre-image only for updates,
-  * and the routed/compacted batch (last event per key) no longer has
+  * and the batch, which the pipeline compacts to the last event per
+  * key before this sink (it does not [[mergesByKey]]), no longer has
   * one — consumers needing full before-images subscribe the generic
   * envelope path (Formats.kafkaJson over the raw stream, verified by
   * cdc_kafka_json_format).

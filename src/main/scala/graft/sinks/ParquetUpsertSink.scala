@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 import graft.meta.TableDef
-import graft.operators.Compactor
+import graft.streaming.Pipeline
 import graft.streaming.Pipeline.BatchSink
 
 /** Parquet-backed upsert/delete sink — the test/file-lake stand-in
@@ -14,8 +14,12 @@ import graft.streaming.Pipeline.BatchSink
   * `outputs/mysql/mysql.go:129-202`).
   *
   * Merge = union(existing state, batch) → last-event-per-key →
-  * drop deletes. Idempotent under at-least-once replay because
-  * compaction keys on the monotone `seq`.
+  * drop deletes; the first batch into an absent target is compacted
+  * alone. The merge is the batch's only compaction: the sink
+  * [[mergesByKey]], so the pipeline hands it the batch uncompacted.
+  * pk-less tables are append-only ([[Pipeline.compacted]]).
+  * Idempotent under at-least-once replay because compaction keys on
+  * the monotone `seq`.
   *
   * At 100 TB this shape is exactly a Delta/Iceberg MERGE INTO; the
   * read-union-rewrite here is the dependency-free equivalent for a
@@ -28,22 +32,18 @@ final class ParquetUpsertSink(rootDir: String) extends BatchSink {
 
   private def path(t: TableDef) = s"$rootDir/${t.schema}.${t.name}"
 
+  override def mergesByKey: Boolean = true
+
   override def write(batch: DataFrame, t: TableDef, batchId: Long): Unit = {
     val spark = batch.sparkSession
     val (hfs, live) = Swap.open(spark, path(t))
     rejectBucketedLayout(hfs, live, t)
-    val pks = t.pkColumns.map(_.name)
-    val merged =
-      if (hfs.exists(live)) {
-        val existing = spark.read.parquet(live.toString)
-        val unioned = existing.unionByName(batch, allowMissingColumns = true)
-        // pk-less tables have no upsert identity: append-only (the
-        // compactor's groupBy() over zero keys would collapse the
-        // whole table to one row)
-        if (pks.isEmpty) unioned
-        else Compactor.lastEventPerKeyAgg(pks, "seq")(unioned)
-      } else batch
-    val finalState = merged.filter(col("op") =!= "delete")
+    val unioned =
+      if (hfs.exists(live)) spark.read.parquet(live.toString)
+        .unionByName(batch, allowMissingColumns = true)
+      else batch
+    val finalState = Pipeline.compacted(unioned, t)
+      .filter(col("op") =!= "delete")
     // Distributed write to the staging dir (executors write in
     // parallel; nothing flows through the driver), then the swap: the
     // dir still being read is never overwritten in place, and

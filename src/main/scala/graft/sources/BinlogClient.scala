@@ -188,9 +188,11 @@ final class BinlogClient(
     * The raw server text ("Could not find first log file name..." /
     * "...have been purged...") names neither what WE asked for nor
     * the recovery, so rethrow with both: continuing from the
-    * checkpoint is impossible and events in the gap are gone — the
-    * only correct recovery is a fresh snapshot backfill before
-    * resuming from the master's CURRENT coordinates. The ERR arrives
+    * checkpoint is impossible and events in the gap are gone. The
+    * recovery this engine supports: re-seed the target outside the
+    * stream, then start on a fresh checkpoint and an empty relay dir
+    * with the input's `gtid` key (`mariadbGtid` on MariaDB) set to the
+    * master's CURRENT executed set. The ERR arrives
     * as the first dump-stream response, i.e. inside the iterator's
     * first advance — hence the wrapper, not a try around the command
     * write. */
@@ -206,9 +208,11 @@ final class BinlogClient(
               s"reports error 1236 (${e.err.message}) — the binlogs " +
               "covering that position have been purged. Events between " +
               "the checkpoint and the earliest retained log are " +
-              "unrecoverable from the stream; run a snapshot backfill " +
-              "and restart from the master's current executed set " +
-              "(SHOW MASTER STATUS).", e)
+              "unrecoverable from the stream. Re-seed the target outside " +
+              "the stream, then start on a fresh checkpoint and an empty " +
+              "relayDir with input key 'gtid' set to the master's current " +
+              "executed set (Executed_Gtid_Set of SHOW MASTER STATUS; " +
+              "'mariadbGtid' from @@gtid_current_pos on MariaDB).", e)
       }
     new Iterator[BinlogClient.Frame] {
       override def hasNext: Boolean = explain(it.hasNext)

@@ -25,11 +25,13 @@ import graft.operators.{Compactor, Transforms}
   *    loops (`outputs/starrocks/starrocks.go:64-134`); default
   *    trigger 3s ≙ the reference's `batch-interval-ms` 3000.
   *  - ordering: per-key last-event compaction on the monotone `seq`
-  *    replaces order-preserving run-splitting (SURVEY §7.5.1).
+  *    replaces order-preserving run-splitting (SURVEY §7.5.1). It
+  *    runs once per table per batch: inside the sink's own merge when
+  *    the sink [[BatchSink.mergesByKey]], else here before the write.
   *  - delivery: at-least-once; offsets/commits live in the
   *    checkpoint dir (≙ GTID bbolt persistence,
   *    `inputs/mysql/mysql_position.go:150-170`); sinks must be
-  *    idempotent by PK, which compacted upserts are.
+  *    idempotent by PK, which upserts keyed on `seq` are.
   *  - DDL: one batch body for both modes. Given an [[Evolution]],
   *    each batch first applies its in-stream DDL to the registry and
   *    forwards it to the routes' targets, then types every route
@@ -63,9 +65,16 @@ object Pipeline {
       source: Option[TableDef] = None)
 
   /** Per-table batch sink (JDBC upsert / stream-load / Kafka /
-    * parquet). Receives a routed, typed, compacted batch. */
+    * parquet). Receives a routed, typed batch, compacted to the last
+    * event per key unless the sink [[mergesByKey]]. */
   trait BatchSink extends Serializable {
     def write(batch: DataFrame, target: TableDef, batchId: Long): Unit
+
+    /** True when `write` itself merges the batch to the last event per
+      * key on the monotone `seq` (pk-less tables append-only, as in
+      * [[compacted]]): the sink then receives the batch uncompacted,
+      * and its merge is the batch's only compaction. */
+    def mergesByKey: Boolean = false
   }
 
   /** Project the generic Map-envelope onto a typed per-table frame:
@@ -87,7 +96,10 @@ object Pipeline {
   }
 
   /** Compact a routed batch to last-event-per-key on `seq`
-    * (hash-agg variant — map-side partial combine; see Compactor). */
+    * (hash-agg variant — map-side partial combine; see Compactor).
+    * pk-less tables have no upsert identity and pass through
+    * append-only (a groupBy over zero keys would collapse the whole
+    * batch to one row). */
   def compacted(batch: DataFrame, t: TableDef): DataFrame = {
     val pks = t.pkColumns.map(_.name)
     if (pks.isEmpty) batch
@@ -125,7 +137,8 @@ object Pipeline {
       .start()
   }
 
-  /** One micro-batch: route → transform → compact → sink, per route.
+  /** One micro-batch: route → transform → compact → sink, per route
+    * (the sink compacts when it [[BatchSink.mergesByKey]]).
     * With an [[Evolution]], the batch's DDL is applied and forwarded
     * first, on the calling thread, so it lands before any DML write.
     * The batch is persisted when it is read more than once. Routes
@@ -158,8 +171,9 @@ object Pipeline {
                 SchemaEvolution.routedVersioned(batch, r.db, r.table, e.registry))
           }
           typed.foreach { case (target, df) =>
-            val compact = compacted(Transforms.chain(r.transforms: _*)(df), target)
-            sink.write(compact, target, batchId)
+            val out = Transforms.chain(r.transforms: _*)(df)
+            sink.write(if (sink.mergesByKey) out else compacted(out, target),
+              target, batchId)
           }
         }
       })

@@ -61,12 +61,8 @@ object Registry {
   registerSink("mysql") { conf =>
     val (url, user, pass) =
       (conf("url"), conf.getOrElse("user", "root"), conf.getOrElse("password", ""))
-    // Pipeline.processBatch compacts right before sink.write, so the
-    // pipeline-wired instance skips the sink's defensive re-compaction
-    // (a second full aggregate+shuffle per micro-batch otherwise)
     new JdbcUpsertSink(() =>
       java.sql.DriverManager.getConnection(url, user, pass),
-      assumeCompacted = true,
       // opt-in poison-row DLQ (see JdbcUpsertSink doc); absent =
       // fail the batch pre-checkpoint, the exactly-once default
       quarantineTable = conf.get("quarantine-table"))

@@ -131,4 +131,22 @@ class BucketedUpsertSinkSpec extends SparkSpec {
     val v = sink.read(target).filter($"id" === 1).select($"v").as[Int].head()
     assert(v == 99)
   }
+
+  test("through the pipeline, several events per key in one batch equal " +
+      "the seq-order oracle into an absent and an existing target, and a " +
+      "replay leaves the same state") {
+    import MergeCases.{drive, oracle, prior}
+    Seq("absent" -> Nil, "existing" -> prior).foreach { case (what, before) =>
+      val sink = new BucketedUpsertSink(
+        Files.createTempDirectory(s"bucket-sink-merge-$what").toString,
+        buckets = 4)
+      if (before.nonEmpty) drive(spark, before, sink, 0)
+      val want = oracle(before ++ MergeCases.batch)
+      drive(spark, MergeCases.batch, sink, 1)
+      assert(MergeCases.state(sink.read(MergeCases.target)) == want, what)
+      drive(spark, MergeCases.batch, sink, 1) // at-least-once replay
+      assert(MergeCases.state(sink.read(MergeCases.target)) == want,
+        s"$what, replayed")
+    }
+  }
 }

@@ -51,4 +51,36 @@ class ParquetUpsertSinkSpec extends SparkSpec {
     assert(Files.list(Paths.get(dir)).iterator().asScala
       .map(_.getFileName.toString).toSeq == Seq("db1.t1"))
   }
+
+  test("through the pipeline, several events per key in one batch equal " +
+      "the seq-order oracle into an absent and an existing target, and a " +
+      "replay leaves the same state") {
+    import MergeCases.{drive, oracle, prior}
+    Seq("absent" -> Nil, "existing" -> prior).foreach { case (what, before) =>
+      val sink = new ParquetUpsertSink(
+        Files.createTempDirectory(s"pq-sink-merge-$what").toString)
+      if (before.nonEmpty) drive(spark, before, sink, 0)
+      val want = oracle(before ++ MergeCases.batch)
+      drive(spark, MergeCases.batch, sink, 1)
+      assert(MergeCases.state(sink.read(MergeCases.target)) == want, what)
+      drive(spark, MergeCases.batch, sink, 1) // at-least-once replay
+      assert(MergeCases.state(sink.read(MergeCases.target)) == want,
+        s"$what, replayed")
+    }
+  }
+
+  test("through the pipeline, a pk-less table stays append-only") {
+    import MergeCases.{drive, ev}
+    val noPk = TableDef("db1", "log", Seq(ColumnDef("id", "bigint"),
+      ColumnDef("v", "int")))
+    val sink = new ParquetUpsertSink(
+      Files.createTempDirectory("pq-sink-nopk").toString)
+    drive(spark, Seq(ev(1, "insert", 1, 10, "log"), ev(2, "update", 1, 11, "log"),
+      ev(3, "insert", 1, 10, "log")), sink, 0, noPk)
+    drive(spark, Seq(ev(4, "insert", 1, 12, "log"), ev(5, "delete", 1, 0, "log")),
+      sink, 1, noPk)
+    // every non-delete event is a row, the repeated one included
+    assert(MergeCases.state(sink.read(noPk)) ==
+      Seq((1L, 10), (1L, 10), (1L, 11), (1L, 12)))
+  }
 }

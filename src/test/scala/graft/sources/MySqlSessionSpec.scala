@@ -520,11 +520,14 @@ class MySqlSessionSpec extends AnyFunSuite {
         val it = c.dumpGtid(set)
         val e = intercept[IllegalStateException](it.hasNext)
         // names what WE asked for, the server's reason, and the
-        // recovery (snapshot backfill + current coordinates)
+        // recovery (re-seed + a fresh start at the current executed
+        // set, through the input's 'gtid' key)
         assert(e.getMessage.contains(set))
         assert(e.getMessage.contains("1236"))
         assert(e.getMessage.contains("purged"))
-        assert(e.getMessage.contains("snapshot backfill"))
+        assert(e.getMessage.contains("Re-seed the target"))
+        assert(e.getMessage.contains("fresh checkpoint"))
+        assert(e.getMessage.contains("input key 'gtid'"))
         assert(e.getCause.isInstanceOf[MySqlErrorException])
       } finally c.close()
     } finally master.close()
@@ -538,7 +541,8 @@ class MySqlSessionSpec extends AnyFunSuite {
         val e2 = intercept[IllegalStateException](
           c2.dump("binlog.000001", 4).hasNext)
         assert(e2.getMessage.contains("file=binlog.000001 pos=4"))
-        assert(e2.getMessage.contains("snapshot backfill"))
+        assert(e2.getMessage.contains("Re-seed the target"))
+        assert(e2.getMessage.contains("input key 'gtid'"))
       } finally c2.close()
     } finally master2.close()
     // any OTHER server error passes through untranslated — the 1236

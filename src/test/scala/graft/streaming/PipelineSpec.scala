@@ -7,6 +7,8 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import scala.jdk.CollectionConverters._
 import scala.util.Random
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -315,6 +317,59 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("work shape: a batch into existing parquet targets runs one shuffle " +
+      "exchange per table") {
+    val dir = Files.createTempDirectory("graft-shape").toString
+    val routes = distinct.map(t => Pipeline.Route("db1", t, tableDef(t)))
+    val sink = new ParquetUpsertSink(dir)
+    Pipeline.processBatch(multiLog(23).toDF(), routes, sink, 0L)
+    val batch = multiLog(24).map(e => e.copy(seq = e.seq + 1000)).toDF()
+    val exchanges = shuffleStagesByTable { tagged =>
+      Pipeline.processBatch(batch, routes, tagged(sink), 1L)
+    }
+    assert(exchanges == distinct.map(_ -> 1).toMap)
+  }
+
+  /** Shuffle-map stages (one per exchange) that `body`'s sink writes
+    * run, by target table: `body` wraps its sink in the given
+    * decorator, which tags each write's jobs with its table. */
+  private def shuffleStagesByTable(
+      body: (Pipeline.BatchSink => Pipeline.BatchSink) => Unit): Map[String, Int] = {
+    val sc = spark.sparkContext
+    val (tableKey, markerKey) = ("graft.test.table", "graft.test.marker")
+    // written by the listener thread only, read after `drained`
+    val tableOf = scala.collection.mutable.Map.empty[Int, String]
+    val shuffleMapStages = scala.collection.mutable.Set.empty[Int]
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        Option(e.properties).foreach { p =>
+          Option(p.getProperty(tableKey)).foreach(tableOf(e.stageInfo.stageId) = _)
+          if (p.getProperty(markerKey) != null) drained.countDown()
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskType == "ShuffleMapTask") shuffleMapStages += e.stageId
+    }
+    val tagging = (real: Pipeline.BatchSink) => new Pipeline.BatchSink {
+      override def mergesByKey: Boolean = real.mergesByKey
+      def write(batch: DataFrame, t: TableDef, batchId: Long): Unit = {
+        sc.setLocalProperty(tableKey, t.name)
+        try real.write(batch, t, batchId) finally sc.setLocalProperty(tableKey, null)
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      body(tagging)
+      // the listener bus delivers in order: once the marker job's stage
+      // arrives, every stage and task `body` ran has been seen
+      sc.setLocalProperty(markerKey, "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(markerKey, null)
+      assert(drained.await(60, TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    shuffleMapStages.toSeq.flatMap(tableOf.get).groupBy(identity)
+      .map { case (t, stages) => t -> stages.size }
+  }
+
   test("evolution: a route with transforms is refused before a query starts") {
     val registry = new SchemaRegistry
     registry.register(target)
@@ -402,6 +457,8 @@ object PipelineSpec {
     val log = new ConcurrentLinkedQueue[Write]
     val inFlight = new java.util.concurrent.atomic.AtomicInteger
     val entered = new CountDownLatch(4)
+
+    override def mergesByKey: Boolean = real.mergesByKey
 
     def write(batch: DataFrame, t: TableDef, batchId: Long): Unit = {
       val sc = batch.sparkSession.sparkContext
